@@ -378,19 +378,19 @@ def main() -> None:
     full_errs: dict[str, str] = {}
 
     # Shared one-time stages, charged to NAMED warm-up lines (VERDICT
-    # r7 #3): the memoized LSH candidate table, the memoized reduced
-    # pair table, the corpus-count memos, and the Python/Arrow worker
-    # pool used to be billed to whichever consumer ran first, so every
-    # _PRIORITY reorder manufactured phantom 3-4x "regressions"
-    # (r7: dedup_fellegi_sunter_weights 0.8->2.5 s with the family
-    # total unchanged).  Timing them here makes per-op numbers
-    # reorder-stable; the lines stay in the total so round-over-round
-    # BENCH_FULL values remain comparable.
-    from parquet_batch_spark.catalog import count_table as _count_table
-    from parquet_batch_spark.operators.dedup import (
-        _inter_pair_stats,
-        _lsh_candidate_pairs,
-    )
+    # r7 #3): the shared stages (catalog.SHARED_STAGES) and the
+    # Python/Arrow worker pool used to be billed to whichever consumer
+    # ran first, so every _PRIORITY reorder manufactured phantom 3-4x
+    # "regressions" (r7: dedup_fellegi_sunter_weights 0.8->2.5 s with
+    # the family total unchanged).  Timing them here makes per-op
+    # numbers reorder-stable; the lines stay in the total so
+    # round-over-round BENCH_FULL values remain comparable.  Stages
+    # that need more than (spark, sf_dir) are warmed by their first
+    # caller: count_table inside the stages warmed here, the capped
+    # SemDeDup quantizer inside dedup_semantic_cluster.
+    import inspect
+
+    from parquet_batch_spark.catalog import SHARED_STAGES
 
     def _warm_python_workers() -> None:
         _materialize(
@@ -399,34 +399,13 @@ def main() -> None:
             )
         )
 
-    warmups = {
-        "_warmup/python_workers": _warm_python_workers,
-        "_warmup/corpus_counts": lambda: [
-            _count_table(spark, SF_DIR, t)
-            for t in ("documents", "embeddings")
-        ],
-        "_warmup/lsh_candidate_pairs": lambda: _materialize(
-            _lsh_candidate_pairs(spark, SF_DIR)
-        ),
-        "_warmup/inter_pair_stats": lambda: _materialize(
-            _inter_pair_stats(spark, SF_DIR)
-        ),
-        # r9: the hash-seeded IVF quantizer is memoized per sf_dir and
-        # shared by 4 ops — train it on a named line, not in whichever
-        # consumer runs first
-        "_warmup/ivf_centroids": lambda: __import__(
-            "parquet_batch_spark.operators.similarity",
-            fromlist=["_hash_seed_cells"],
-        )._hash_seed_cells(spark, SF_DIR),
-        # r9: the segment-sharing edge table is memoized+checkpointed
-        # and shared by 9 graph consumers
-        "_warmup/segment_edges": lambda: _materialize(
-            __import__(
-                "parquet_batch_spark.operators.llm_prep",
-                fromlist=["segment_edges"],
-            ).segment_edges(spark, SF_DIR)
-        ),
-    }
+    warmups = {"_warmup/python_workers": _warm_python_workers}
+    for stage_name, stage in SHARED_STAGES.items():
+        extra = list(inspect.signature(stage).parameters.values())[2:]
+        if all(p.default is not p.empty for p in extra):
+            warmups[f"_warmup/{stage_name}"] = (
+                lambda stage=stage: stage(spark, SF_DIR)
+            )
     for name, warm in warmups.items():
         t0 = time.monotonic()
         try:

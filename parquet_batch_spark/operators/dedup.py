@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_batch_spark.catalog import count_table, fan_out, load
+from parquet_batch_spark.catalog import count_table, fan_out, load, shared_stage
 from parquet_batch_spark.functions.hashing import (
     MERSENNE_P,
     affine_hash,
@@ -71,15 +71,6 @@ SHINGLE_DF_CAP_ABS = 128
 
 _HASH_PARAMS = hash_params(N_HASHES)
 
-# Shared-stage materialization: the candidate-pair tables that several
-# operators consume in one run (LSH candidates; the inverted-index
-# intersection pass) are localCheckpoint-materialized and memoized per
-# (session, sf_dir) so the second consumer reuses them.  Plan-shape
-# tests set this to False to audit the UNDERLYING logical pipeline —
-# a checkpointed plan reads as an RDD scan and would hide the join
-# topology the audits exist to pin.
-MATERIALIZE_SHARED_STAGES = True
-
 
 # ---------------------------------------------------------------- exact
 
@@ -114,10 +105,8 @@ ORDER BY keep_doc_id
 
 # ---------------------------------------------------------------- minhash
 
-def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, h) for every DISTINCT shingle hash per document, with
-    boilerplate shingles (document frequency above the corpus-relative
-    cap) dropped before any downstream self-join."""
+def _shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, h) for every DISTINCT shingle hash per document."""
     d = fan_out(load(spark, sf_dir, "documents"), spark, "doc_id")
     sh = d.select(
         "doc_id",
@@ -125,19 +114,18 @@ def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "shingle"
         ),
     )
-    hashes = sh.select("doc_id", hash32(F.col("shingle")).alias("h"))
-    # scalar corpus count resolved eagerly (zero-column scan, one cheap
-    # job, memoized per sf_dir) so the cap is a plan literal — no
-    # scalar-broadcast join in every downstream dedup plan; int()
-    # truncation == the oracle's floor() for non-negative counts
-    # the HOT list (df > cap) is tiny by construction — at most
-    # total-shingle-occurrences / cap entries — so the cap is a
-    # stop-shingle-list lookup, not a shuffle of the (doc, h) stream.
-    # Memoized per sf_dir: minhash, jaccard and clusters all consume it
-    # in one bench/driver run. Small lists inline as a literal NOT IN
-    # (what a broadcast anti-join computes, minus the join machinery);
-    # larger lists fall back to the broadcast anti-join.
-    hot = _hot_shingles(spark, sf_dir, hashes)
+    return sh.select("doc_id", hash32(F.col("shingle")).alias("h"))
+
+
+def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_shingle_hashes`` with boilerplate shingles (document
+    frequency above the corpus-relative cap) dropped before any
+    downstream self-join."""
+    hashes = _shingle_hashes(spark, sf_dir)
+    # Small hot lists inline as a literal NOT IN (what a broadcast
+    # anti-join computes, minus the join machinery); larger lists fall
+    # back to the broadcast anti-join.
+    hot = _hot_shingles(spark, sf_dir, hashes=hashes)
     if not hot:
         return hashes
     if len(hot) <= 10_000:
@@ -146,37 +134,34 @@ def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hashes.join(F.broadcast(hot_df), "h", "left_anti")
 
 
-_HOT_SHINGLES: dict[str, list[int]] = {}
-
-
-def _hot_shingles(spark: SparkSession, sf_dir: str, hashes: DataFrame) -> list[int]:
-    if sf_dir not in _HOT_SHINGLES:
-        cap = min(
-            SHINGLE_DF_CAP_ABS,
-            max(
-                SHINGLE_DF_CAP_MIN,
-                int(_corpus_count(spark, sf_dir) * SHINGLE_DF_CAP_FRAC),
-            ),
+@shared_stage("documents")
+def _hot_shingles(
+    spark: SparkSession, sf_dir: str, hashes: DataFrame | None = None
+) -> list[int]:
+    """Shingle hashes whose document frequency exceeds the cap.  The
+    list is tiny by construction — at most total-shingle-occurrences /
+    cap entries — so the cap is a stop-shingle-list lookup, not a
+    shuffle of the (doc, h) stream.  The corpus count is resolved
+    eagerly so the cap is a plan literal; int() truncation == the
+    oracle's floor() for non-negative counts."""
+    cap = min(
+        SHINGLE_DF_CAP_ABS,
+        max(
+            SHINGLE_DF_CAP_MIN,
+            int(count_table(spark, sf_dir, "documents") * SHINGLE_DF_CAP_FRAC),
+        ),
+    )
+    if hashes is None:
+        hashes = _shingle_hashes(spark, sf_dir)
+    return sorted(
+        r["h"]
+        for r in (
+            hashes.groupBy("h")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") > F.lit(cap))
+            .collect()
         )
-        _HOT_SHINGLES[sf_dir] = sorted(
-            r["h"]
-            for r in (
-                hashes.groupBy("h")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") > F.lit(cap))
-                .collect()
-            )
-        )
-    return _HOT_SHINGLES[sf_dir]
-
-
-_CORPUS_COUNTS: dict[str, int] = {}
-
-
-def _corpus_count(spark: SparkSession, sf_dir: str) -> int:
-    if sf_dir not in _CORPUS_COUNTS:
-        _CORPUS_COUNTS[sf_dir] = load(spark, sf_dir, "documents").count()
-    return _CORPUS_COUNTS[sf_dir]
+    )
 
 
 def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,24 +178,11 @@ def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LSH_CAND_PAIRS: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_stage("documents")
 def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, sig_a, sig_b) pairs sharing ≥1 LSH band — the
     raw candidate set BEFORE the estimated-Jaccard filter (shared by
-    dedup_minhash_lsh, dedup_clusters and the recall evaluation).
-
-    localCheckpoint-materialized and memoized per (session, sf_dir):
-    the shingle→signature→band-join pipeline is the expensive stage,
-    and every downstream consumer (pair list, connected components,
-    recall eval) reuses the one materialized candidate table — the
-    checkpoint-the-candidates step a real 100 TB pipeline performs
-    before pair verification.
-    """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if MATERIALIZE_SHARED_STAGES and key in _LSH_CAND_PAIRS:
-        return _LSH_CAND_PAIRS[key]
+    dedup_minhash_lsh, dedup_clusters and the recall evaluation)."""
     sigs = _minhash_signatures(spark, sf_dir)
     bands = sigs.select(
         "doc_id",
@@ -232,7 +204,7 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = bands.alias("a")
     b = bands.alias("b")
-    cands = (
+    return (
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -247,10 +219,6 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    if not MATERIALIZE_SHARED_STAGES:
-        return cands
-    _LSH_CAND_PAIRS[key] = cands.localCheckpoint()
-    return _LSH_CAND_PAIRS[key]
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -466,9 +434,7 @@ ORDER BY doc_a, doc_b
 
 # ---------------------------------------------------------------- jaccard
 
-_INTER_PAIRS: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_stage("documents")
 def _inter_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, n_inter, n_a, n_b) — ONE inverted-index
     intersection pass feeding every set-overlap metric (Jaccard,
@@ -479,16 +445,7 @@ def _inter_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles above the document-frequency cap are dropped first (see
     SHINGLE_DF_CAP_*), so no stop-phrase bucket exceeds ABS docs and
     per-shingle pair work is bounded by ABS² at any corpus size.
-
-    The reduced pair table is localCheckpoint-materialized and memoized
-    per (session, sf_dir): the second consumer in a run reuses it
-    instead of re-running the self-join — the "one intersection pass"
-    a real pipeline computes both metrics from (r4 VERDICT #4 made
-    this docstring claim true).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if MATERIALIZE_SHARED_STAGES and key in _INTER_PAIRS:
-        return _INTER_PAIRS[key]
     hashes = _doc_shingle_hashes(spark, sf_dir)
     sizes = hashes.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = hashes.alias("a")
@@ -503,11 +460,7 @@ def _inter_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    pairs = inter.join(sa, "doc_a").join(sb, "doc_b")
-    if not MATERIALIZE_SHARED_STAGES:
-        return pairs
-    _INTER_PAIRS[key] = pairs.localCheckpoint()
-    return _INTER_PAIRS[key]
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -53,7 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from parquet_batch_spark.catalog import count_table, fan_out, load
+from parquet_batch_spark.catalog import count_table, fan_out, load, shared_stage
 from parquet_batch_spark.functions.hashing import hash32, sql_hash32
 from parquet_batch_spark.functions.text import (
     shingles_col,
@@ -1006,30 +1006,13 @@ def segment_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return segs.join(F.broadcast(hot), "seg_h", "left_anti")
 
 
-# Memoized materialized edge table per (session, sf_dir) — r9: NINE
-# registered consumers (graph_degree_histogram + the corpus_ops graph
-# family) each re-ran the tokenize→segment→hash→self-join build.  Same
-# checkpoint-the-shared-stage pattern as dedup._lsh_candidate_pairs,
-# gated by the same MATERIALIZE_SHARED_STAGES switch so plan tests can
-# assert on the full build.
-_SEGMENT_EDGES: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_stage("documents")
 def segment_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected unique edges (a < b) of the segment-sharing graph —
     the capped inverted-index construction shared by
-    ``graph_degree_histogram`` and the corpus_ops graph family,
-    localCheckpoint-materialized and memoized per (session, sf_dir):
-    checkpointing the candidate/edge table before the iterative graph
-    passes is exactly what a 100 TB pipeline does, and every consumer
-    reuses the one materialized table."""
-    from parquet_batch_spark.operators import dedup as _dedup
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if _dedup.MATERIALIZE_SHARED_STAGES and key in _SEGMENT_EDGES:
-        return _SEGMENT_EDGES[key]
+    ``graph_degree_histogram`` and the corpus_ops graph family."""
     cold = segment_incidence(spark, sf_dir)
-    edges = (
+    return (
         cold.join(
             cold.select(F.col("seg_h").alias("h2"), F.col("doc_id").alias("doc_b")),
             (F.col("seg_h") == F.col("h2")) & (F.col("doc_id") < F.col("doc_b")),
@@ -1037,10 +1020,6 @@ def segment_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("a"), F.col("doc_b").alias("b"))
         .distinct()
     )
-    if not _dedup.MATERIALIZE_SHARED_STAGES:
-        return edges
-    _SEGMENT_EDGES[key] = edges.localCheckpoint()
-    return _SEGMENT_EDGES[key]
 
 
 # DuckDB CTE block (toks → … → edges) mirroring segment_edges; callers

@@ -29,7 +29,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from parquet_batch_spark.catalog import count_table, fan_out, load
+from parquet_batch_spark.catalog import count_table, fan_out, load, shared_stage
 from parquet_batch_spark.functions.hashing import MERSENNE_P, hash32, sql_hash32
 
 TOP_K = 5
@@ -269,47 +269,42 @@ def _ivf_nprobe(k: int) -> int:
     return max(IVF_NPROBE_FLOOR, k // 4)
 
 
-# Memoized coarse-quantizer centroids per (sf_dir, k) (r9): four
-# registered ops (ann_ivf_topk, ann_ivfpq_topk, embedding_kmeans_rollup,
-# dedup_semantic_cluster) train the SAME hash-seeded quantizer, each
-# paying the ~1 s top-k-by-hash corpus job — the same repeated-shared-
-# stage shape the LSH candidate-table memo solved in dedup.py.  Only
-# PLAIN DATA (numpy centroids + k) is memoized, never a DataFrame: the
-# memo must survive session restarts within one process (the source
-# parquet is immutable for a process lifetime, so it can't go stale).
-_CELL_MEMO: dict[tuple[str, int | None], tuple] = {}
-
-
-def _hash_seed_cells(spark: SparkSession, sf_dir: str, k_override: int | None = None):
-    """(base df, centroid matrix, k) for the hash-sampled coarse
-    quantizer shared by ann_ivf_topk / ann_ivfpq_topk /
-    embedding_kmeans_rollup / dedup_semantic_cluster: centroids are
-    the k = max(16, ceil(sqrt(N))) corpus vectors with the smallest
-    portable md5 hash of their id; cell id = rank in that ordering.
-    Training is ONE top-k-by-hash selection — no Lloyd corpus passes —
-    the k×dim collect is bounded (~16 MB at N=1e9), and the result is
-    memoized per (sf_dir, k_override) so the four consumers train once.
-    ``k_override`` lets a consumer demand MORE cells than the sqrt rule
-    (dedup_semantic_cluster's cell-population cap, r10) without
-    invalidating the shared default-k memo."""
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v: array<double>) over the whole embeddings table."""
     em = fan_out(load(spark, sf_dir, "embeddings"), spark)
-    base = em.select("vec_id", _dvec().alias("v"))
-    memo_key = (sf_dir, k_override)
-    if memo_key not in _CELL_MEMO:
-        n = count_table(spark, sf_dir, "embeddings")
-        k = k_override if k_override is not None else _ivf_k(n)
-        seed_rows = (
-            base.withColumn("hk", hash32(F.col("vec_id").cast("string")))
-            .orderBy("hk", "vec_id")
-            .limit(k)
-            .collect()
-        )
-        cents = np.asarray(
-            [np.asarray(r["v"], dtype=np.float64) for r in seed_rows]
-        )
-        _CELL_MEMO[memo_key] = (cents, k)
-    cents, k = _CELL_MEMO[memo_key]
-    return base, cents, k
+    return em.select("vec_id", _dvec().alias("v"))
+
+
+def _hash_seed_draw(vecs: DataFrame, k: int):
+    """The k vectors with the smallest portable md5 hash of their id,
+    as a k×dim centroid matrix (row = cell id)."""
+    seed_rows = (
+        vecs.withColumn("hk", hash32(F.col("vec_id").cast("string")))
+        .orderBy("hk", "vec_id")
+        .limit(k)
+        .collect()
+    )
+    return np.asarray([np.asarray(r["v"], dtype=np.float64) for r in seed_rows])
+
+
+@shared_stage("embeddings")
+def _ivf_centroids(spark: SparkSession, sf_dir: str, vecs: DataFrame | None = None):
+    """(centroid matrix, k) of the hash-sampled coarse quantizer shared
+    by ann_ivf_topk / ann_ivfpq_topk / embedding_kmeans_rollup:
+    centroids are the k = max(16, ceil(sqrt(N))) corpus vectors with
+    the smallest hash.  Training is ONE top-k-by-hash selection — no
+    Lloyd corpus passes — and the k×dim collect is bounded (~16 MB at
+    N=1e9)."""
+    k = _ivf_k(count_table(spark, sf_dir, "embeddings"))
+    if vecs is None:
+        vecs = _vectors(spark, sf_dir)
+    return _hash_seed_draw(vecs, k), k
+
+
+def _hash_seed_cells(spark: SparkSession, sf_dir: str):
+    """(base df, centroid matrix, k) for the shared coarse quantizer."""
+    base = _vectors(spark, sf_dir)
+    return (base, *_ivf_centroids(spark, sf_dir, vecs=base))
 
 
 def _assign_cells(base: DataFrame, cents, n_assign: int) -> DataFrame:
@@ -879,12 +874,27 @@ SEM_COS_THRESHOLD = 0.45  # semantic-duplicate cosine gate
 # at all and the cap is sized by the only mass that can pair.
 SEM_MAX_CELL = 1000
 
-# SemDeDup's quantizer memo: (sf_dir, cap) -> (centroids, k, D).
-# Distinct from _CELL_MEMO because the seeds are hash-selected from the
-# DISTINCT-vector table, not the raw corpus (identical on dup-free
-# data, different — and correct — under duplication); D rides along so
-# the dup-free plan choice needs no extra job after the first call.
-_SEM_MEMO: dict[tuple[str, int], tuple] = {}
+
+def _distinct_vectors(nv: DataFrame) -> DataFrame:
+    """One min-id representative per exact-duplicate vector group."""
+    return nv.groupBy("v").agg(F.min("vec_id").alias("vec_id"))
+
+
+@shared_stage("embeddings")
+def _sem_centroids(
+    spark: SparkSession, sf_dir: str, cap: int, dist: DataFrame | None = None
+):
+    """(centroids, k, D) of SemDeDup's quantizer at cell cap ``cap``.
+    Unlike ``_ivf_centroids`` the seeds are hash-selected from the
+    DISTINCT-vector table, not the raw corpus (identical on dup-free
+    data, different — and correct — under duplication); D rides along
+    so the dup-free plan choice needs no extra job after the first
+    call."""
+    if dist is None:
+        dist = _distinct_vectors(_vectors(spark, sf_dir))
+    d_n = dist.count()
+    k = max(_ivf_k(d_n), -(-d_n // cap))
+    return _hash_seed_draw(dist, k), k, d_n
 
 
 def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -922,28 +932,11 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment (as in ``ann_ivf_topk``) remains the recall knob for
     boundary pairs, kept at 1 to match the published algorithm.
     """
-    em = fan_out(load(spark, sf_dir, "embeddings"), spark)
-    nv = em.select("vec_id", _dvec().alias("v"))
-    # distinct-vector collapse: one min-id representative per exact
-    # duplicate group; map-side combine makes this the dup-dense win
-    dist = nv.groupBy("v").agg(F.min("vec_id").alias("vec_id"))
-    memo_key = (sf_dir, SEM_MAX_CELL)
-    if memo_key not in _SEM_MEMO:
-        d_n = dist.count()
-        k_sem = max(_ivf_k(d_n), -(-d_n // SEM_MAX_CELL))
-        seed_rows = (
-            dist.withColumn("hk", hash32(F.col("vec_id").cast("string")))
-            .orderBy("hk", "vec_id")
-            .limit(k_sem)
-            .collect()
-        )
-        cents = np.asarray(
-            [np.asarray(r["v"], dtype=np.float64) for r in seed_rows]
-        )
-        _SEM_MEMO[memo_key] = (cents, k_sem, d_n)
-    cents, _k, d_n = _SEM_MEMO[memo_key]
+    nv = _vectors(spark, sf_dir)
+    dist = _distinct_vectors(nv)
+    cents, _k, d_n = _sem_centroids(spark, sf_dir, SEM_MAX_CELL, dist=dist)
     # skew-adaptive plan choice (the AQE pattern, decided from the
-    # memoized distinct count): with zero duplication the collapse is
+    # shared distinct count): with zero duplication the collapse is
     # the IDENTITY, so the groupBy shuffle and the member re-join are
     # pure overhead — run the pair stage over nv directly and emit
     # drops straight from the pairs (bit-identical: every group is a

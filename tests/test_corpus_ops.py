@@ -58,9 +58,9 @@ def test_triangle_plan_no_cartesian(spark, sf_dir, monkeypatch):
     # assert on the FULL edge-build subtree, not the memoized
     # localCheckpoint scan (ADVICE r9: segment_edges materializes once
     # per session, which silently removed the edge joins from this plan)
-    from parquet_batch_spark.operators import dedup as dedup_mod
+    from parquet_batch_spark import catalog
 
-    monkeypatch.setattr(dedup_mod, "MATERIALIZE_SHARED_STAGES", False)
+    monkeypatch.setattr(catalog, "MATERIALIZE_SHARED_STAGES", False)
     plan = executed_plan(graph_triangle_count(spark, sf_dir))
     # the three scalar-combine crossJoins are broadcast single-row NLJs
     # (acceptable); a CartesianProduct would mean the edge joins

@@ -143,6 +143,7 @@ def test_dedup_pipelines_avoid_cartesian(spark, sf_dir, monkeypatch):
     plans would be a 100 TB death sentence. COS_SMALL_CORPUS is forced
     to 0 so the SCALE path of the cosine pipeline is what gets
     plan-audited, not the gated single-task toy path."""
+    from parquet_batch_spark import catalog
     from parquet_batch_spark.operators import dedup as dedup_mod
     from parquet_batch_spark.operators.dedup import (
         dedup_embedding_cosine,
@@ -153,7 +154,7 @@ def test_dedup_pipelines_avoid_cartesian(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(dedup_mod, "COS_SMALL_CORPUS", 0)
     # audit the LOGICAL pipeline, not the memoized checkpoint scan
-    monkeypatch.setattr(dedup_mod, "MATERIALIZE_SHARED_STAGES", False)
+    monkeypatch.setattr(catalog, "MATERIALIZE_SHARED_STAGES", False)
     for fn in (dedup_minhash_lsh, dedup_simhash, dedup_ngram_jaccard, dedup_embedding_cosine):
         plan = executed_plan(fn(spark, sf_dir))
         assert "CartesianProduct" not in plan, f"{fn.__name__}: cartesian!"
@@ -226,10 +227,10 @@ def test_minhash_band_join_is_equi_join(spark, sf_dir, monkeypatch):
     """The LSH candidate join must be a hash/sort-merge EQUI-join on
     the band key (its shuffle is bounded by bucket size), with the
     doc_a < doc_b ordering applied as a post-join condition."""
-    from parquet_batch_spark.operators import dedup as dedup_mod
+    from parquet_batch_spark import catalog
     from parquet_batch_spark.operators.dedup import dedup_minhash_lsh
 
-    monkeypatch.setattr(dedup_mod, "MATERIALIZE_SHARED_STAGES", False)
+    monkeypatch.setattr(catalog, "MATERIALIZE_SHARED_STAGES", False)
     plan = executed_plan(dedup_minhash_lsh(spark, sf_dir))
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
         "BroadcastHashJoin" in plan
@@ -511,12 +512,12 @@ def test_r5_pair_ops_scale_shapes(spark, sf_dir, monkeypatch):
 
 
 def test_kcore_rounds_are_hash_joins_no_cartesian(spark, sf_smoke, monkeypatch):
-    from parquet_batch_spark.operators import dedup as dedup_mod
+    from parquet_batch_spark import catalog
     from parquet_batch_spark.operators.corpus_ops import graph_kcore
 
     # assert on the FULL edge-build subtree, not the memoized
     # checkpoint scan (r9: segment_edges materializes once per session)
-    monkeypatch.setattr(dedup_mod, "MATERIALIZE_SHARED_STAGES", False)
+    monkeypatch.setattr(catalog, "MATERIALIZE_SHARED_STAGES", False)
     plan = executed_plan(graph_kcore(spark, sf_smoke))
     assert "CartesianProduct" not in plan
     # the shrinking-node-set joins stay equi (hash/SMJ), never NLJ
@@ -552,12 +553,12 @@ def test_threshold_sweep_ladder_is_broadcast(spark, sf_smoke):
 
 
 def test_neighborhood_jaccard_no_cartesian(spark, sf_smoke, monkeypatch):
-    from parquet_batch_spark.operators import dedup as dedup_mod
+    from parquet_batch_spark import catalog
     from parquet_batch_spark.operators.corpus_ops import (
         graph_neighborhood_jaccard,
     )
 
-    monkeypatch.setattr(dedup_mod, "MATERIALIZE_SHARED_STAGES", False)
+    monkeypatch.setattr(catalog, "MATERIALIZE_SHARED_STAGES", False)
     plan = executed_plan(graph_neighborhood_jaccard(spark, sf_smoke))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -624,7 +625,7 @@ _DRIVER_MATERIALIZATION_WHITELIST = {
             "reduced-table normalization pattern)"),
     ("operators/dedup.py", "_hot_shingles", "collect"):
         (1, "hot-key list: at most sum(df)/cap entries survive the "
-            "absolute df cap (pigeonhole), memoized per sf_dir"),
+            "absolute df cap (pigeonhole), a shared stage"),
     ("operators/dedup.py", "dedup_clusters", "collect"):
         (2, "1-row scalar SUM(label) convergence probes per CC round"),
     ("operators/pipeline_ops.py", "decontam_bloom_filter", "collect"):
@@ -640,13 +641,11 @@ _DRIVER_MATERIALIZATION_WHITELIST = {
         (1, "ONE union of FL_ROUNDS TakeOrderedAndProject limits: "
             "<= FL_ROUNDS*(FL_CANDS+FL_ROUNDS-1) = 28 rows total "
             "(pool vectors ride along — the fused draw+fetch)"),
-    ("operators/similarity.py", "_hash_seed_cells", "collect"):
-        (1, "hash-ordered limit(K) seed draw, K = ceil(sqrt(N)) "
-            "centroids of dim doubles"),
-    ("operators/similarity.py", "dedup_semantic_cluster", "collect"):
-        (1, "hash-ordered limit(K) seed draw over the DISTINCT-vector "
-            "table (r12 collapse), K = max(16, ceil(sqrt(D)), "
-            "ceil(D/SEM_MAX_CELL)) rows, memoized per (sf_dir, cap)"),
+    ("operators/similarity.py", "_hash_seed_draw", "collect"):
+        (1, "hash-ordered limit(K) seed draw of K centroids of dim "
+            "doubles: K = ceil(sqrt(N)) for the IVF quantizer, K = "
+            "max(16, ceil(sqrt(D)), ceil(D/SEM_MAX_CELL)) over the "
+            "DISTINCT-vector table for SemDeDup"),
     ("operators/similarity.py", "ann_ivf_topk", "collect"):
         (1, "query side: vec_id < N_QUERIES (<=10 rows)"),
     ("operators/similarity.py", "ann_ivfpq_topk", "collect"):

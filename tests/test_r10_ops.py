@@ -99,7 +99,7 @@ def test_semdedup_cell_cap_binds_and_matches_oracle(spark, sf_smoke, monkeypatch
     r = compare("semdedup_capped", df, capped_sql, duckdb_conn(sf_smoke))
     assert r.ok, r.detail
     # and the capped quantizer really trained more cells than sqrt(D)
-    assert sim._SEM_MEMO[(sf_smoke, 10)][1] == 50
+    assert sim._sem_centroids(spark, sf_smoke, 10)[1] == 50
 
 
 def test_semdedup_cap_is_behavior_neutral_below_crossover(spark, sf_smoke):
@@ -113,7 +113,7 @@ def test_semdedup_cap_is_behavior_neutral_below_crossover(spark, sf_smoke):
     n = count_table(spark, sf_smoke, "embeddings")
     assert -(-n // sim.SEM_MAX_CELL) <= sim._ivf_k(n)
     sim.dedup_semantic_cluster(spark, sf_smoke)
-    cents, k, d_n = sim._SEM_MEMO[(sf_smoke, sim.SEM_MAX_CELL)]
+    cents, k, d_n = sim._sem_centroids(spark, sf_smoke, sim.SEM_MAX_CELL)
     # committed fixtures are dup-free, so D = N and the sqrt rule wins
     assert k == sim._ivf_k(n)
     assert len(cents) == k

@@ -118,7 +118,7 @@ def test_semdedup_k_sized_from_distinct_mass(spark, tmp_path):
     sf_dir, ids, _ = _dup_dense_embeddings(tmp_path, groups)
     assert len(ids) == 2000
     sim.dedup_semantic_cluster(spark, sf_dir).collect()
-    cents, k, d_n = sim._SEM_MEMO[(sf_dir, sim.SEM_MAX_CELL)]
+    cents, k, d_n = sim._sem_centroids(spark, sf_dir, sim.SEM_MAX_CELL)
     assert k == 16, f"K must follow distinct mass: got {k}"
     assert len(cents) == 16
 

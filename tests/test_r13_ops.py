@@ -1,11 +1,12 @@
 """Round-13 optimization pins.
 
-1. Memo audit (VERDICT r12 #7): the in-process memos (_SEM_MEMO,
-   _HOT_SHINGLES, _CORPUS_COUNTS) are pure derived-state caches — a
-   fresh process/cleared dict recomputes them FROM the parquet inputs
-   and the op's results are bit-identical warm vs cold, so they cannot
-   carry results across runs (no cross-run leakage; the driver's
-   cold-JVM bench never sees a warm memo).
+1. Memo audit (VERDICT r12 #7): the shared stages behind SemDeDup and
+   the dedup shingle cap (sem_centroids, hot_shingles, count_table)
+   are pure derived-state caches — a fresh process/cleared cache
+   recomputes them FROM the parquet inputs and the op's results are
+   bit-identical warm vs cold, so they cannot carry results across
+   runs (no cross-run leakage; the driver's cold-JVM bench never sees
+   a warm cache).
 2. window_hurst_exponent (r13 restructure): the single exploded-lag
    plan must be row-for-row identical to the former per-lag-branch
    shape — the equivalence claim behind the Exchange collapse.
@@ -14,6 +15,8 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+from parquet_batch_spark.catalog import clear_shared_stages
 
 
 def _rows(df):
@@ -26,50 +29,39 @@ def _rows(df):
 def test_sem_memo_recomputes_and_results_identical(spark, sf_smoke):
     from parquet_batch_spark.operators import similarity as sim
 
-    key = (sf_smoke, sim.SEM_MAX_CELL)
     warm = _rows(sim.dedup_semantic_cluster(spark, sf_smoke))
-    assert key in sim._SEM_MEMO
-    saved = sim._SEM_MEMO.pop(key)  # simulate a fresh process
-    try:
-        cold = _rows(sim.dedup_semantic_cluster(spark, sf_smoke))
-        assert key in sim._SEM_MEMO, "memo must repopulate from parquet"
-        # recomputed quantizer state matches the original derivation
-        cents, k, d_n = sim._SEM_MEMO[key]
-        assert (k, d_n) == (saved[1], saved[2])
-        assert (cents == saved[0]).all()
-        assert cold == warm, "results must not depend on memo warmth"
-    finally:
-        sim._SEM_MEMO[key] = saved
+    saved = sim._sem_centroids(spark, sf_smoke, sim.SEM_MAX_CELL)
+    assert sim._sem_centroids(spark, sf_smoke, sim.SEM_MAX_CELL) is saved
+    clear_shared_stages("sem_centroids")  # simulate a fresh process
+    cold = _rows(sim.dedup_semantic_cluster(spark, sf_smoke))
+    cents, k, d_n = sim._sem_centroids(spark, sf_smoke, sim.SEM_MAX_CELL)
+    assert cents is not saved[0], "stage must recompute from parquet"
+    # recomputed quantizer state matches the original derivation
+    assert (k, d_n) == (saved[1], saved[2])
+    assert (cents == saved[0]).all()
+    assert cold == warm, "results must not depend on memo warmth"
 
 
 def test_hot_shingles_memo_recomputes_and_results_identical(spark, sf_smoke):
     from parquet_batch_spark.operators import dedup as dd
 
-    # _doc_shingle_hashes is the producer that consults the memo;
-    # dedup_minhash_lsh itself would reuse the memoized LSH candidate
-    # table and never reach it, so clear BOTH memo layers to simulate
-    # a genuinely fresh process.
-    lsh_key = (spark.sparkContext.applicationId, sf_smoke)
+    # _doc_shingle_hashes is the producer that consults the hot list;
+    # dedup_minhash_lsh itself would reuse the shared LSH candidate
+    # table and never reach it, so clear every layer to simulate a
+    # genuinely fresh process.
     warm = sorted(_rows(dd._doc_shingle_hashes(spark, sf_smoke)))
     warm_lsh = _rows(dd.dedup_minhash_lsh(spark, sf_smoke))
-    assert sf_smoke in dd._HOT_SHINGLES
-    saved_hot = dd._HOT_SHINGLES.pop(sf_smoke)
-    saved_cnt = dd._CORPUS_COUNTS.pop(sf_smoke, None)
-    saved_lsh = dd._LSH_CAND_PAIRS.pop(lsh_key, None)
-    try:
-        cold = sorted(_rows(dd._doc_shingle_hashes(spark, sf_smoke)))
-        assert dd._HOT_SHINGLES[sf_smoke] == saved_hot, (
-            "hot-shingle list must recompute identically from parquet"
-        )
-        assert cold == warm, "results must not depend on memo warmth"
-        cold_lsh = _rows(dd.dedup_minhash_lsh(spark, sf_smoke))
-        assert cold_lsh == warm_lsh
-    finally:
-        dd._HOT_SHINGLES[sf_smoke] = saved_hot
-        if saved_cnt is not None:
-            dd._CORPUS_COUNTS[sf_smoke] = saved_cnt
-        if saved_lsh is not None:
-            dd._LSH_CAND_PAIRS[lsh_key] = saved_lsh
+    saved_hot = dd._hot_shingles(spark, sf_smoke)
+    assert dd._hot_shingles(spark, sf_smoke) is saved_hot
+    clear_shared_stages("hot_shingles", "count_table", "lsh_candidate_pairs")
+    cold = sorted(_rows(dd._doc_shingle_hashes(spark, sf_smoke)))
+    cold_hot = dd._hot_shingles(spark, sf_smoke)
+    assert cold_hot is not saved_hot and cold_hot == saved_hot, (
+        "hot-shingle list must recompute identically from parquet"
+    )
+    assert cold == warm, "results must not depend on memo warmth"
+    cold_lsh = _rows(dd.dedup_minhash_lsh(spark, sf_smoke))
+    assert cold_lsh == warm_lsh
 
 
 # ------------------------------------- hurst exploded-lag equivalence

@@ -141,19 +141,21 @@ def test_stats_profile_exact_plans_without_expand(spark, sf_dir):
 
 
 def test_hash_seed_cells_memoized_per_sf_dir(spark, sf_dir):
-    """r9: the coarse-quantizer training collect is shared by four
+    """r9: the coarse-quantizer training collect is shared by three
     registered ops — the centroid matrix must be computed once per
-    sf_dir (identity-stable across calls) and stay correct (k rows,
-    consistent with _ivf_k of the corpus count)."""
-    from parquet_batch_spark.catalog import count_table
+    sf_dir (identity-stable across calls), recompute cold once the
+    cache is cleared, and stay correct (k rows, consistent with _ivf_k
+    of the corpus count)."""
+    from parquet_batch_spark.catalog import clear_shared_stages, count_table
     from parquet_batch_spark.operators.similarity import (
-        _CELL_MEMO,
         _hash_seed_cells,
         _ivf_k,
     )
 
-    _CELL_MEMO.pop(sf_dir, None)
+    _, warm, _ = _hash_seed_cells(spark, sf_dir)
+    clear_shared_stages("ivf_centroids")
     _, cents1, k1 = _hash_seed_cells(spark, sf_dir)
+    assert cents1 is not warm and (cents1 == warm).all()
     _, cents2, k2 = _hash_seed_cells(spark, sf_dir)
     assert cents1 is cents2 and k1 == k2
     assert k1 == _ivf_k(count_table(spark, sf_dir, "embeddings"))
@@ -165,24 +167,20 @@ def test_segment_edges_memoized_and_checkpointed(spark, sf_dir):
     it must materialize once per (session, sf_dir) and return the same
     DataFrame object on re-call; with MATERIALIZE_SHARED_STAGES off it
     must return the raw (un-memoized) build."""
-    from parquet_batch_spark.operators import dedup as dedup_mod
-    from parquet_batch_spark.operators.llm_prep import (
-        _SEGMENT_EDGES,
-        segment_edges,
-    )
+    from parquet_batch_spark import catalog
+    from parquet_batch_spark.operators.llm_prep import segment_edges
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _SEGMENT_EDGES.pop(key, None)
+    catalog.clear_shared_stages("segment_edges")
     e1 = segment_edges(spark, sf_dir)
     e2 = segment_edges(spark, sf_dir)
     assert e1 is e2
     rows = e1.count()
     assert rows > 0
-    old = dedup_mod.MATERIALIZE_SHARED_STAGES
+    old = catalog.MATERIALIZE_SHARED_STAGES
     try:
-        dedup_mod.MATERIALIZE_SHARED_STAGES = False
+        catalog.MATERIALIZE_SHARED_STAGES = False
         raw = segment_edges(spark, sf_dir)
         assert raw is not e1
         assert raw.count() == rows
     finally:
-        dedup_mod.MATERIALIZE_SHARED_STAGES = old
+        catalog.MATERIALIZE_SHARED_STAGES = old

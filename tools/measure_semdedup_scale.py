@@ -46,7 +46,7 @@ def main() -> None:
                 t0 = time.monotonic()
                 mat(sim.dedup_semantic_cluster(spark, x100))
                 best = min(best, time.monotonic() - t0)
-            _, k, _d = sim._SEM_MEMO[(x100, cap)]
+            _, k, _d = sim._sem_centroids(spark, x100, cap)
             print(
                 f"{tag:28s} N={n} K={k} wall={best:6.2f}s",
                 flush=True,
