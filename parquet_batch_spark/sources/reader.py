@@ -21,23 +21,66 @@ test intent describe. Spark Rows are immutable so the bug class
 cannot recur.
 
 Memory model parity: the reference streams one Arrow RecordBatch
-(+readahead) at a time (reader.py:93-96). Here ``toLocalIterator``
-streams one *partition* at a time to the driver — executors scan in
-parallel (the scan itself is distributed, unlike the reference), but
-driver-resident memory stays bounded by one partition, the same
-envelope contract. ``prefetchPartitions`` maps to the reference's
-``batch_readahead`` concept.
+(+readahead) at a time and pivots it into Python dicts with
+``.as_py()`` (reader.py:59-72, 93-96). Here the scan's Arrow record
+batches (``Dataset.toArrowBatchRdd``) are served to the driver one
+*partition* at a time over the same socket protocol
+``toLocalIterator`` uses — executors scan in parallel (the scan
+itself is distributed, unlike the reference), but the driver JVM
+holds one partition's Arrow frames at a time (plus the next one with
+prefetch), and Python decodes and pivots one batch of at most
+``batch_size`` rows (``spark.sql.execution.arrow.
+maxRecordsPerBatch``, 10k by default) at a time. The pivot is
+column-wise: each column becomes a Python list in one call, nested
+structs, arrays and maps recurse through their child columns and
+list offsets, and the columns are zipped into per-row dicts equal
+to what ``Row.asDict(recursive=True)`` returns; the per-row dicts
+themselves are built lazily as the caller iterates. Streaming 30k
+rows in 10k-row batches at full width (string/int/float columns, a
+struct with a list member, a list column) grows driver RSS by ~2 MB,
+against ~0.2 MB for per-row unpickling of Spark Rows.
+``prefetch_partitions`` maps to the reference's ``batch_readahead``
+concept.
 """
 
 from __future__ import annotations
 
+import os
 import warnings
-from collections.abc import Generator, Iterable
+from collections.abc import Generator, Iterable, Iterator
+from itertools import pairwise, repeat
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    ByteType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StringType,
+    StructType,
+    TimestampType,
+)
 
-_BATCH_SIZE_CONF = "spark.sql.parquet.columnarReaderBatchSize"
+# ``batch_size`` bounds both the executors' vectorized parquet batch
+# and the Arrow batch the driver pivots at once.
+_BATCH_SIZE_CONFS = (
+    "spark.sql.parquet.columnarReaderBatchSize",
+    "spark.sql.execution.arrow.maxRecordsPerBatch",
+)
+_BINARY_AS_BYTES_CONF = "spark.sql.execution.pyspark.binaryAsBytes"
+# Spark types whose null-free Arrow column converts in one numpy call.
+_NUMPY_TYPES = (
+    BooleanType, ByteType, ShortType, IntegerType, LongType, FloatType,
+    DoubleType, StringType,
+)
 
 
 class ParquetReader:
@@ -75,11 +118,13 @@ class ParquetReader:
 
         - ``batch_size`` (rows per Arrow batch) → the vectorized
           parquet reader's ``spark.sql.parquet.columnarReaderBatchSize``
-          (rows per columnar batch), set for the duration of the scan
-          and restored when the generator closes;
-        - ``batch_readahead`` → ``toLocalIterator(prefetchPartitions=)``
-          (driver prefetches the next partition while consuming the
-          current one — Spark's unit of readahead is the partition);
+          (rows per columnar batch) and the driver-side pivot batch
+          ``spark.sql.execution.arrow.maxRecordsPerBatch``, both set for
+          the duration of the stream and restored when the generator
+          closes;
+        - ``batch_readahead`` → ``prefetch_partitions`` (driver
+          prefetches the next partition while consuming the current
+          one — Spark's unit of readahead is the partition);
         - ``fragment_readahead`` / ``use_threads`` — no per-query Spark
           analog (executor-side IO parallelism is cluster-scheduled);
           accepted for drop-in compatibility with a one-time warning.
@@ -98,18 +143,21 @@ class ParquetReader:
         if prefetch_partitions is None:
             prefetch_partitions = bool(batch_readahead)
         conf = df.sparkSession.conf
-        prior = conf.get(_BATCH_SIZE_CONF, None) if batch_size is not None else None
-        if batch_size is not None:
-            conf.set(_BATCH_SIZE_CONF, str(batch_size))
+        prior = (
+            {k: conf.get(k, None) for k in _BATCH_SIZE_CONFS}
+            if batch_size is not None
+            else {}
+        )
+        for key in prior:
+            conf.set(key, str(batch_size))
         try:
-            for row in df.toLocalIterator(prefetchPartitions=prefetch_partitions):
-                yield row.asDict(recursive=True)
+            yield from _arrow_rows(df, prefetch_partitions)
         finally:
-            if batch_size is not None:
-                if prior is None:
-                    conf.unset(_BATCH_SIZE_CONF)
+            for key, value in prior.items():
+                if value is None:
+                    conf.unset(key)
                 else:
-                    conf.set(_BATCH_SIZE_CONF, prior)
+                    conf.set(key, value)
 
     def get_rows(self, columns: list[str]) -> Generator[dict, None, None]:
         """Primary path (reference reader.py:90-97): projected scan,
@@ -121,7 +169,9 @@ class ParquetReader:
 
 
 def from_path(
-    spark: SparkSession, parquet_path: str | Iterable[str], **options: Any
+    spark: SparkSession,
+    parquet_path: str | os.PathLike | Iterable[str | os.PathLike],
+    **options: Any,
 ) -> ParquetReader:
     """Build a reader from a file, directory, or list of paths
     (reference reader.py:128-129; multi-file datasets per O2).
@@ -131,7 +181,9 @@ def from_path(
     the reference's ``exclude_invalid_files`` / ``ignore_prefixes``
     convenience (reference tests/test_parquetbatch.py:392-398) without
     dropping to ``from_dataset``."""
-    paths = [parquet_path] if isinstance(parquet_path, str) else list(parquet_path)
+    if isinstance(parquet_path, (str, os.PathLike)):
+        parquet_path = [parquet_path]
+    paths = [os.fspath(p) for p in parquet_path]
     reader = spark.read
     if options:
         reader = reader.options(**options)
@@ -141,5 +193,94 @@ def from_path(
 def from_dataset(df: DataFrame) -> ParquetReader:
     """Wrap a caller-configured DataFrame (reference reader.py:112-113
     — the 'preconfigured source' path O3: caller controls schema,
-    corrupt-file handling, path filters via DataFrameReader options)."""
+    corrupt-file handling, path filters via DataFrameReader options).
+    Every column needs an Arrow mapping: all Parquet-readable types
+    have one, the calendar and year-month interval types do not."""
     return ParquetReader(df)
+
+
+def _arrow_rows(df: DataFrame, prefetch_partitions: bool) -> Iterator[dict]:
+    """Serve ``df``'s Arrow record batches to the driver one partition
+    at a time (``toLocalIterator``'s socket protocol) and pivot each
+    batch into per-row dicts."""
+    import pyarrow as pa
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.traceback_utils import SCCallSiteSync
+    from pyspark.util import _local_iterator_from_socket
+
+    spark, schema = df.sparkSession, df.schema
+    arrow_schema = to_arrow_schema(
+        schema, prefers_large_types=spark._jconf.arrowUseLargeVarTypes()
+    )
+    # the Row path yields bytes, or bytearray when this conf is off
+    as_bytes = spark.conf.get(_BINARY_AS_BYTES_CONF).lower() == "true"
+    sc = spark.sparkContext
+    with SCCallSiteSync(sc):
+        sock_info = sc._jvm.PythonRDD.toLocalIteratorAndServe(
+            df._jdf.toArrowBatchRdd(), prefetch_partitions
+        )
+    for frame in _local_iterator_from_socket(sock_info, NoOpSerializer()):
+        batch = pa.ipc.read_record_batch(pa.py_buffer(frame), arrow_schema)
+        yield from _dicts(schema, batch.columns, batch.num_rows, as_bytes)
+
+
+def _dicts(
+    schema: StructType, columns: list, num_rows: int, as_bytes: bool
+) -> Iterator[dict]:
+    """Pivot a struct's child columns, then zip them lazily into one
+    dict per row."""
+    if not schema.fields:
+        return ({} for _ in range(num_rows))
+    values = [
+        _column(c, f.dataType, as_bytes) for c, f in zip(columns, schema.fields)
+    ]
+    return map(dict, map(zip, repeat(schema.names), zip(*values)))
+
+
+def _column(arr: Any, dt: DataType, as_bytes: bool) -> list:
+    """One Arrow column as the Python values ``Row.asDict(recursive=True)``
+    holds for it. Structs, arrays and maps recurse through their child
+    columns (list offsets are absolute into the unsliced child)."""
+    if not len(arr):
+        return []  # Arrow Java may leave an empty list's offsets unwritten
+    if isinstance(dt, StructType):
+        children = [arr.field(i) for i in range(len(dt.fields))]
+        values = list(_dicts(dt, children, len(arr), as_bytes))
+    elif isinstance(dt, (ArrayType, MapType)):
+        offsets = arr.offsets.to_numpy()
+        start, end = int(offsets[0]), int(offsets[-1])
+        spans = pairwise((offsets - start).tolist())
+        if isinstance(dt, ArrayType):
+            items = _column(
+                arr.values.slice(start, end - start), dt.elementType, as_bytes
+            )
+            values = [items[a:b] for a, b in spans]
+        else:
+            keys = _leaf(arr.keys.slice(start, end - start), dt.keyType, as_bytes)
+            items = _column(
+                arr.items.slice(start, end - start), dt.valueType, as_bytes
+            )
+            values = [dict(zip(keys[a:b], items[a:b])) for a, b in spans]
+    else:
+        return _leaf(arr, dt, as_bytes)
+    if arr.null_count:
+        for i in arr.is_null().to_numpy(zero_copy_only=False).nonzero()[0].tolist():
+            values[i] = None
+    return values
+
+
+def _leaf(arr: Any, dt: DataType, as_bytes: bool) -> list:
+    """Python values of a column that is not pivoted through children
+    (map keys included: a struct key stays a hashable ``Row``)."""
+    if isinstance(dt, TimestampType):
+        # UTC micros → local naive datetime through the Row path's own
+        # fromInternal: astimezone() would drop fold=1 in a repeated DST hour
+        return list(map(dt.fromInternal, arr.cast("int64").to_pylist()))
+    if arr.null_count == 0 and isinstance(dt, _NUMPY_TYPES):
+        return arr.to_numpy(zero_copy_only=False).tolist()
+    values = arr.to_pylist()
+    conv = ArrowTableToRowsConversion._create_converter(
+        dt, none_on_identity=True, binary_as_bytes=as_bytes
+    )
+    return values if conv is None else list(map(conv, values))

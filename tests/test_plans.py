@@ -693,14 +693,15 @@ _DRIVER_MATERIALIZATION_WHITELIST = {
         (2, "single-row boundary probes"),
     ("operators/windows.py", "window_nth_value", "first"):
         (1, "single-row probe"),
-    ("sources/reader.py", "get_rows_with_args", "toLocalIterator"):
+    ("sources/reader.py", "_arrow_rows", "toLocalIteratorAndServe"):
         (1, "the reference O8 contract IS a lazy driver-side row "
-            "iterator (reference reader.py:105); toLocalIterator "
-            "streams one partition at a time, never the full frame"),
+            "iterator (reference reader.py:105); the Arrow batch RDD "
+            "is served one partition at a time, never the full frame"),
 }
 
 _DRIVER_MATERIALIZATION_METHODS = (
-    "collect", "toPandas", "toLocalIterator", "take", "head", "first",
+    "collect", "toPandas", "toLocalIterator", "toLocalIteratorAndServe",
+    "take", "head", "first",
 )
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from parquet_batch_spark.sources import ParquetReader, from_dataset, from_path
 from parquet_batch_spark.sources.writer import write_parquet
@@ -103,20 +104,64 @@ def test_filter_passthrough(spark, tmp_path):
     assert sorted(r["f_int"] for r in rows) == list(range(5, 10))
 
 
+_BATCH_CONF_KEYS = (
+    "spark.sql.parquet.columnarReaderBatchSize",
+    "spark.sql.execution.arrow.maxRecordsPerBatch",
+)
+
+
 def test_batch_size_maps_to_spark_conf(spark, tmp_path):
     """Arrow scan-tuning kwargs take effect via their Spark analogs
     (reference reader.py:93-96): batch_size sets the vectorized
-    reader's columnarReaderBatchSize for the scan's duration and is
+    reader's columnarReaderBatchSize and the driver-side Arrow batch
+    (maxRecordsPerBatch) for the scan's duration, and both are
     restored when the generator closes."""
     conf_key = "spark.sql.parquet.columnarReaderBatchSize"
     prior = spark.conf.get(conf_key, None)
+    priors = {k: spark.conf.get(k, None) for k in _BATCH_CONF_KEYS}
     path = _write_fixture(str(tmp_path / "ds"), 5, 5)
     gen = from_path(spark, path).get_rows_with_args(columns=["f_int"], batch_size=2)
     first = next(gen)
     assert first is not None
     assert spark.conf.get(conf_key) == "2"
+    assert all(spark.conf.get(k) == "2" for k in _BATCH_CONF_KEYS)
     gen.close()
     assert spark.conf.get(conf_key, None) == prior
+    assert {k: spark.conf.get(k, None) for k in _BATCH_CONF_KEYS} == priors
+
+
+def test_batch_size_bounds_driver_batches(spark, tmp_path, monkeypatch):
+    """The driver decodes Arrow batches of at most batch_size rows."""
+    import parquet_batch_spark.sources.reader as reader_mod
+
+    sizes = []
+    pivot = reader_mod._dicts
+
+    def spy(schema, columns, num_rows, as_bytes):
+        sizes.append(num_rows)
+        return pivot(schema, columns, num_rows, as_bytes)
+
+    monkeypatch.setattr(reader_mod, "_dicts", spy)
+    path = _write_fixture(str(tmp_path / "ds"), 12, 12)
+    rows = list(from_path(spark, path).get_rows_with_args(columns=["f_int"], batch_size=5))
+    assert len(rows) == 12
+    assert sizes == [5, 5, 2]
+
+
+def test_early_abandon_restores_conf_and_releases_stream(spark, tmp_path):
+    """Closing a half-read stream restores both batch confs and frees
+    the JVM serving thread: the next full stream on the same session
+    returns every row."""
+    priors = {k: spark.conf.get(k, None) for k in _BATCH_CONF_KEYS}
+    path = _write_fixture(str(tmp_path / "ds"), 30, 10)
+    reader = from_path(spark, path)
+    gen = reader.get_rows_with_args(batch_size=3, prefetch_partitions=True)
+    for _row in gen:
+        break
+    gen.close()
+    assert {k: spark.conf.get(k, None) for k in _BATCH_CONF_KEYS} == priors
+    rows = sorted(reader.get_rows_with_args(), key=lambda r: r["f_int"])
+    assert rows == _mixed_rows(30)
 
 
 def test_use_threads_warns_no_analog(spark, tmp_path):
@@ -132,6 +177,18 @@ def test_use_threads_warns_no_analog(spark, tmp_path):
         )
     assert len(rows) == 5
     assert any("no Spark analog" in str(w.message) for w in caught)
+
+
+def test_from_path_accepts_pathlike(spark, tmp_path):
+    """from_path takes os.PathLike paths, alone or in a list, as the
+    reference's ``ds.dataset`` does."""
+    _write_fixture(str(tmp_path / "ds"), 8, 4)
+    single = list(from_path(spark, tmp_path / "ds").get_rows(["f_int"]))
+    assert sorted(r["f_int"] for r in single) == list(range(-4, 4))
+    files = sorted((tmp_path / "ds").glob("*.parquet"))
+    assert len(files) == 2
+    listed = list(from_path(spark, files).get_rows(["f_int"]))
+    assert len(listed) == 8
 
 
 def test_from_path_reader_options(spark, tmp_path):
@@ -218,3 +275,212 @@ def test_hidden_and_corrupt_files_excluded(spark, sf_dir, tmp_path):
         .parquet(str(d))
     )
     assert back.count() == n
+
+
+# ---------------------------------------------------------------- type matrix
+# The Arrow stream must yield exactly what the Row path yields:
+# ``[r.asDict(recursive=True) for r in df.collect()]``, compared by repr
+# (so bytes vs bytearray, int vs float, Decimal scale and NaN all count).
+
+_MATRIX_DDL = (
+    "k INT, f_bool BOOLEAN, f_byte TINYINT, f_short SMALLINT, f_int INT, "
+    "f_long BIGINT, f_float FLOAT, f_double DOUBLE, f_dec DECIMAL(12,3), "
+    "f_dec_wide DECIMAL(38,18), f_str STRING, f_bin BINARY, f_date DATE, "
+    "f_ts TIMESTAMP, f_ts_ntz TIMESTAMP_NTZ, "
+    "f_struct STRUCT<a: INT, b: STRING, inner: STRUCT<x: DOUBLE, ts: TIMESTAMP, "
+    "raw: BINARY>>, "
+    "f_arr_struct ARRAY<STRUCT<s: STRING, v: BIGINT>>, "
+    "f_arr_int ARRAY<INT>, f_arr_arr ARRAY<ARRAY<STRING>>, "
+    "f_map MAP<STRING, STRUCT<p: INT, q: BINARY>>, "
+    "f_map_struct_key MAP<STRUCT<id: INT, tag: STRING>, DOUBLE>"
+)
+
+
+def _matrix_rows(n: int) -> list[tuple]:
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import Row
+
+    base_ts = dt.datetime(2021, 3, 14, 1, 59, 26, 535897)
+    rows = []
+    for i in range(n):
+        nul = i % 5 == 0  # every fifth row nulls the scalar columns
+        ts = base_ts + dt.timedelta(days=37 * i, microseconds=i)
+        if i == 7:  # 01:30 EST, the repeated hour in America/New_York: fold=1
+            ts = dt.datetime(2021, 11, 7, 6, 30, tzinfo=dt.timezone.utc)
+        rows.append(
+            (
+                i,
+                None if nul else i % 2 == 0,
+                None if nul else (i % 256) - 128,
+                None if nul else i * 97 - 3000,
+                None if nul else i * 7919 - 50_000,
+                None if nul else (i - n // 2) * 10**12 + 7,
+                None if nul else (float("nan") if i % 7 == 0 else i / 7.0),
+                None if nul else (float("nan") if i % 3 == 0 else -i / 3.0),
+                None if nul else Decimal(i * 1001 - 20_000).scaleb(-3),
+                None if nul else (Decimal(0) if i % 4 == 0 else Decimal(i).scaleb(-18)),
+                None if nul else f"str_{i}_é",
+                None if nul else bytes([i % 256, 0, 255]),
+                None if nul else dt.date(1969, 12, 31) + dt.timedelta(days=i * 11),
+                None if nul else ts,
+                None if nul else ts,
+                None
+                if i % 6 == 1
+                else Row(
+                    a=None if nul else i,
+                    b=f"b{i}",
+                    inner=None
+                    if i % 4 == 2
+                    else Row(x=i / 9.0, ts=None if nul else ts, raw=bytes([i % 256])),
+                ),
+                None
+                if i % 6 == 2
+                else [
+                    None if j == 1 and i % 3 == 0 else Row(s=f"e{i}.{j}", v=None if j == 2 else i * j)
+                    for j in range(i % 4)
+                ],
+                None if i % 6 == 3 else [None if j % 3 == 1 else j for j in range(i % 5)],
+                None
+                if nul
+                else [[f"{i}.{j}.{m}" for m in range(j)] if j != 2 else None for j in range(i % 4)],
+                None
+                if i % 6 == 4
+                else {
+                    f"m{j}": None if j == 1 else Row(p=j, q=None if j == 2 else bytes([j]))
+                    for j in range(i % 4)
+                },
+                None if nul else {Row(id=j, tag=None if j else "t"): j / 2.0 for j in range(i % 3)},
+            )
+        )
+    return rows
+
+
+@pytest.fixture(scope="module")
+def matrix_path(spark, tmp_path_factory):
+    """The type matrix written as several parquet files (several scan
+    partitions)."""
+    path = str(tmp_path_factory.mktemp("matrix") / "ds")
+    df = spark.createDataFrame(_matrix_rows(60), _MATRIX_DDL)
+    df.repartition(3).write.option("maxRecordsPerFile", 11).parquet(path)
+    return path
+
+
+@pytest.fixture
+def local_tz():
+    """Run with a non-UTC local zone (with DST), so TimestampType
+    values must be converted to local naive datetimes as the Row path
+    does."""
+    import os
+    import time
+
+    prior = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    yield
+    if prior is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = prior
+    time.tzset()
+
+
+def _row_path(df) -> list[dict]:
+    return [r.asDict(recursive=True) for r in df.collect()]
+
+
+_MAP_COLS = ("f_map", "f_map_struct_key")
+
+
+def _by_key(rows) -> list[dict]:
+    """Rows ordered by ``k``, each map's entries ordered by key: the
+    Row path yields map entries in JVM HashMap order, the stream in
+    stored order, and neither order is part of the contract."""
+    out = []
+    for row in sorted(rows, key=lambda r: r["k"]):
+        for c in _MAP_COLS:
+            if row.get(c) is not None:
+                row[c] = dict(sorted(row[c].items(), key=lambda kv: repr(kv[0])))
+        out.append(row)
+    return out
+
+
+@pytest.mark.parametrize(
+    "conf",
+    [
+        {},
+        {"spark.sql.execution.pyspark.binaryAsBytes": "false"},
+        {"spark.sql.execution.arrow.useLargeVarTypes": "true"},
+    ],
+    ids=["default", "binary-as-bytearray", "large-var-types"],
+)
+def test_type_matrix_equals_row_path(spark, matrix_path, local_tz, conf):
+    """Full width, every type, under the session confs that change
+    the Row path's values (binaryAsBytes) or the Arrow encoding
+    (useLargeVarTypes)."""
+    priors = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        df = spark.read.parquet(matrix_path)
+        assert df.rdd.getNumPartitions() > 1
+        want = _by_key(_row_path(df))
+        got = _by_key(from_path(spark, matrix_path).get_rows_with_args())
+    finally:
+        for k, v in priors.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert len(got) == 60
+    assert repr(got) == repr(want)
+
+
+def test_map_entries_keep_stored_order(spark, tmp_path):
+    path = str(tmp_path / "maps")
+    spark.sql("SELECT map('z', 1, 'a', 2, 'm', 3) AS m").write.parquet(path)
+    (row,) = from_path(spark, path).get_rows(["m"])
+    assert list(row["m"]) == ["z", "a", "m"]
+
+
+@pytest.mark.parametrize("prefetch", [True, False], ids=["prefetch", "no-prefetch"])
+def test_type_matrix_prefetch_and_batch_size(spark, matrix_path, local_tz, prefetch):
+    """Multi-partition input, small driver batches, prefetch on/off."""
+    df = spark.read.parquet(matrix_path)
+    want = _by_key(_row_path(df))
+    got = _by_key(
+        from_path(spark, matrix_path).get_rows_with_args(
+            batch_size=4, prefetch_partitions=prefetch
+        )
+    )
+    assert repr(got) == repr(want)
+
+
+def test_type_matrix_projection_and_filter(spark, matrix_path, local_tz):
+    cols = ["k", "f_ts", "f_struct", "f_map"]
+    df = spark.read.parquet(matrix_path).filter("k % 2 = 1").select(*cols)
+    want = _by_key(_row_path(df))
+    got = _by_key(
+        from_path(spark, matrix_path).get_rows_with_args(columns=cols, filter="k % 2 = 1")
+    )
+    assert len(got) == 30
+    assert repr(got) == repr(want)
+
+
+def test_zero_column_projection_yields_empty_dicts(spark, matrix_path):
+    rows = list(from_path(spark, matrix_path).get_rows_with_args(columns=[]))
+    assert rows == [{}] * 60
+    assert len({id(r) for r in rows}) == 60
+
+
+def test_filter_matching_no_rows(spark, matrix_path):
+    assert list(from_path(spark, matrix_path).get_rows_with_args(filter="k < 0")) == []
+
+
+def test_ordered_dataset_streams_in_order(spark, matrix_path):
+    """Partition order is kept: a globally sorted DataFrame streams in
+    sort order."""
+    df = spark.read.parquet(matrix_path).orderBy(F.col("k").desc())
+    ks = [r["k"] for r in from_dataset(df).get_rows(["k"])]
+    assert ks == list(range(59, -1, -1))
