@@ -14,6 +14,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -52,6 +53,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     micros arrive as a native timestamp and only need the ntz cast
     (session tz pinned to UTC first, so the cast is wall-clock
     exact).
+
+    The schema comes from ``table_schema``, so a table version pays
+    its schema-inference job once per run, not once per load.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -60,7 +64,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # (the driver builds its own); both confs are runtime-settable.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    confs = tuple(spark.conf.get(k) for k in SCHEMA_CONFS)
+    schema = table_schema(spark, sf_dir, name, *confs)
+    df = spark.read.schema(schema).parquet(table_path(sf_dir, name))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -161,6 +167,26 @@ def clear_shared_stages(*names: str) -> None:
     for key in list(_STAGE_CACHE):
         if not names or key[2] in names:
             del _STAGE_CACHE[key]
+
+
+# Session confs that decide how Parquet types map to Spark types: the
+# inferred schema depends on them, so they are part of its key.
+SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+@shared_stage()
+def table_schema(spark: SparkSession, sf_dir: str, name: str, *confs: str) -> StructType:
+    """Inferred schema of a source table under the conf values
+    ``confs`` (``SCHEMA_CONFS`` order).  Inference reads the Parquet
+    footers in a Spark job; ``load`` reads with this schema instead of
+    inferring again, and a rewritten table re-infers through the
+    fingerprint."""
+    return spark.read.parquet(table_path(sf_dir, name)).schema
 
 
 @shared_stage()

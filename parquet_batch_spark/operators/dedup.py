@@ -143,7 +143,14 @@ def _hot_shingles(
     cap entries — so the cap is a stop-shingle-list lookup, not a
     shuffle of the (doc, h) stream.  The corpus count is resolved
     eagerly so the cap is a plan literal; int() truncation == the
-    oracle's floor() for non-negative counts."""
+    oracle's floor() for non-negative counts.
+
+    This pass shingles the corpus, and the signature pass that drops
+    the hot hashes shingles it again; the (doc_id, h) stream is not
+    materialized between them.  At 100 TB that stream is about the
+    size of the corpus itself, while re-shingling is one linear pass
+    over the text (``shingles_col`` tokenizes each document once).
+    """
     cap = min(
         SHINGLE_DF_CAP_ABS,
         max(
@@ -202,8 +209,14 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band_idx", "band_sig"),
     )
+    # A shuffled join, not a broadcast: both sides then read the one
+    # Exchange on (band_idx, band_sig), which runs once and is reused
+    # (ReusedExchange).  A broadcast self-join of this derived table
+    # would recompute its build side — every shingle, md5 and
+    # signature — from the scan.  Above the broadcast threshold the
+    # planner picks this shuffled join anyway.
     a = bands.alias("a")
-    b = bands.alias("b")
+    b = bands.alias("b").hint("merge")
     return (
         a.join(
             b,

@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from parquet_batch_spark.catalog import count_table, fan_out, load, shared_stage
 from parquet_batch_spark.functions.hashing import hash32, sql_hash32
 from parquet_batch_spark.functions.text import (
+    segments_col,
     shingles_col,
     sql_shingles,
     sql_tokens,
@@ -252,7 +253,9 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     while unique prose survives — the paragraph-dedup stage of C4-style
     pipelines. Output: per-document segment accounting.
 
-    Scale: segments are an explode + first-seen ranking on the segment
+    Scale: segmenting is linear in document length (``segments_col``
+    tokenizes once per row; each segment is a slice of those tokens).
+    Segments are an explode + first-seen ranking on the segment
     hash — one shuffle on the hash (window partition), one shuffle back
     to doc_id. Never pairs segments against each other; the window per
     hash value is the duplicate-cluster size, bounded by the same
@@ -262,18 +265,11 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     same topology as dedup.py's first-seen reductions).
     """
     d = fan_out(load(spark, sf_dir, "documents"), spark, "doc_id")
-    toks = tokens_col("text")
-    n_seg = F.ceil(F.size(toks) / F.lit(SEG_TOKENS)).cast("int")
     segs = d.select(
         "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), n_seg),
-                lambda i: F.concat_ws(
-                    " ", F.slice(toks, (i - 1) * SEG_TOKENS + 1, SEG_TOKENS)
-                ),
-            )
-        ).alias("pos0", "seg"),
+        F.posexplode(segments_col(tokens_col("text"), SEG_TOKENS)).alias(
+            "pos0", "seg"
+        ),
     ).select(
         "doc_id",
         (F.col("pos0") + 1).alias("pos"),
@@ -980,21 +976,14 @@ def segment_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, seg_h) incidence list of the capped segment index —
     the shared substrate under ``segment_edges`` and corpus_ops'
     Adamic-Adar scoring: distinct per-doc segments, hot segments
-    (> {DEGREE_HOT_CAP} docs) removed so no key can go quadratic."""
+    (> {DEGREE_HOT_CAP} docs) removed so no key can go quadratic.
+    Segmenting is linear in document length: ``segments_col``
+    tokenizes each document once and slices the segments from it."""
     d = fan_out(load(spark, sf_dir, "documents"), spark, "doc_id")
-    toks = tokens_col("text")
-    n_seg = F.ceil(F.size(toks) / F.lit(SEG_TOKENS)).cast("int")
     segs = d.select(
         "doc_id",
         F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), n_seg),
-                    lambda i: F.concat_ws(
-                        " ", F.slice(toks, (i - 1) * SEG_TOKENS + 1, SEG_TOKENS)
-                    ),
-                )
-            )
+            F.array_distinct(segments_col(tokens_col("text"), SEG_TOKENS))
         ).alias("seg"),
     ).select("doc_id", hash32(F.col("seg")).alias("seg_h"))
     hot = (
@@ -1299,19 +1288,10 @@ def text_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered over the reduced segment table.
     """
     d = fan_out(load(spark, sf_dir, "documents"), spark, "doc_id")
-    toks = tokens_col("text")
-    n_seg = F.ceil(F.size(toks) / F.lit(SEG_TOKENS)).cast("int")
     segs = d.select(
         "doc_id",
         F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), n_seg),
-                    lambda i: F.concat_ws(
-                        " ", F.slice(toks, (i - 1) * SEG_TOKENS + 1, SEG_TOKENS)
-                    ),
-                )
-            )
+            F.array_distinct(segments_col(tokens_col("text"), SEG_TOKENS))
         ).alias("seg"),
     )
     n_docs = count_table(spark, sf_dir, "documents")

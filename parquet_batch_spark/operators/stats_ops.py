@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from parquet_batch_spark.catalog import count_table, fan_out, load
 from parquet_batch_spark.functions.hashing import hash32, sql_hash32
-from parquet_batch_spark.functions.text import sql_tokens, tokens_col
+from parquet_batch_spark.functions.text import bind, marker_langid, sql_tokens, tokens_col
 
 
 @contextmanager
@@ -5706,24 +5706,7 @@ def agg_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     accuracy.  One corpus pass to the confusion counts (the
     label×prediction domain bounds the table), then scalar algebra."""
     d = fan_out(load(spark, sf_dir, "documents"), spark)
-    toks = tokens_col("text")
-
-    def marker_score(markers: list[str]):
-        return F.size(F.filter(toks, lambda t: t.isin(markers))).cast("bigint")
-
-    markers = {
-        "en": ["the", "a", "of", "and", "to"],
-        "es": ["el", "la", "de", "que", "y"],
-        "fr": ["le", "la", "les", "et", "une"],
-        "de": ["der", "die", "das", "und", "ein"],
-    }
-    scores = {lang: marker_score(m) for lang, m in markers.items()}
-    pred = F.lit("unknown")
-    best = F.lit(0).cast("bigint")
-    for lang in reversed(list(markers)):
-        s = scores[lang]
-        pred = F.when((s >= best) & (s > 0), F.lit(lang)).otherwise(pred)
-        best = F.greatest(best, s)
+    pred = marker_langid(tokens_col("text")).pred
     conf = (
         d.select(F.col("lang").alias("y"), pred.alias("p"))
         .groupBy("y", "p")
@@ -5845,24 +5828,7 @@ def agg_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer, and the statistic is one micro-division.  One corpus
     pass to four paired-outcome counts."""
     d = fan_out(load(spark, sf_dir, "documents"), spark)
-    toks = tokens_col("text")
-
-    def marker_score(markers: list[str]):
-        return F.size(F.filter(toks, lambda t: t.isin(markers))).cast("bigint")
-
-    markers = {
-        "en": ["the", "a", "of", "and", "to"],
-        "es": ["el", "la", "de", "que", "y"],
-        "fr": ["le", "la", "les", "et", "une"],
-        "de": ["der", "die", "das", "und", "ein"],
-    }
-    scores = {lang: marker_score(m) for lang, m in markers.items()}
-    pred = F.lit("unknown")
-    best = F.lit(0).cast("bigint")
-    for lang in reversed(list(markers)):
-        s = scores[lang]
-        pred = F.when((s >= best) & (s > 0), F.lit(lang)).otherwise(pred)
-        best = F.greatest(best, s)
+    pred = marker_langid(tokens_col("text")).pred
     paired = d.select(
         (pred == F.col("lang")).alias("a_ok"),
         (F.lit("en") == F.col("lang")).alias("b_ok"),
@@ -10203,37 +10169,16 @@ def quality_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     by truncating division.
     """
     d = fan_out(load(spark, sf_dir, "documents"), spark)
-    toks = tokens_col("text")
-
-    def marker_score(markers: list[str]):
-        return F.size(F.filter(toks, lambda t: t.isin(markers))).cast(
-            "bigint"
-        )
-
-    multi = {
-        "en": ["the", "a", "of", "and", "to"],
-        "es": ["el", "la", "de", "que", "y"],
-        "fr": ["le", "la", "les", "et", "une"],
-        "de": ["der", "die", "das", "und", "ein"],
-    }
     single = {"en": ["the"], "es": ["el"], "fr": ["les"], "de": ["der"]}
-
-    def classify(markers: dict[str, list[str]]):
-        scores = {lang: marker_score(m) for lang, m in markers.items()}
-        pred = F.lit("unknown")
-        best = F.lit(0).cast("bigint")
-        for lang in reversed(list(markers)):
-            sc = scores[lang]
-            pred = F.when((sc >= best) & (sc > 0), F.lit(lang)).otherwise(
-                pred
-            )
-            best = F.greatest(best, sc)
-        return pred
-
-    rated = d.select(
-        classify(multi).alias("ra"),
-        F.lit("en").alias("rb"),
-        classify(single).alias("rc"),
+    # both raters read the same tokens: split once, classify twice
+    raters = bind(
+        tokens_col("text"),
+        lambda t: F.struct(
+            marker_langid(t).pred.alias("ra"), marker_langid(t, single).pred.alias("rc")
+        ),
+    )
+    rated = d.select(raters.alias("r")).select(
+        "r.ra", F.lit("en").alias("rb"), "r.rc"
     )
     d2 = (
         2

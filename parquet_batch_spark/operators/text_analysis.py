@@ -13,12 +13,15 @@ map-side first).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_batch_spark.catalog import fan_out, load
 from parquet_batch_spark.functions.hashing import MERSENNE_P, hash32, sql_hash32
 from parquet_batch_spark.functions.text import (
+    LANG_MARKERS,
+    bind,
+    marker_langid,
     shingles_col,
     sql_shingles,
     sql_tokens,
@@ -77,16 +80,6 @@ ORDER BY doc_id
 
 # ---------------------------------------------------------------- lang id
 
-# marker stopwords per language (n-gram-free heuristic: distinctive
-# function words; deterministic argmax with fixed language order)
-_LANG_MARKERS = {
-    "en": ["the", "a", "of", "and", "to"],
-    "es": ["el", "la", "de", "que", "y"],
-    "fr": ["le", "la", "les", "et", "une"],
-    "de": ["der", "die", "das", "und", "ein"],
-}
-
-
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-marker language ID with per-language hit counts.
 
@@ -95,30 +88,17 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed language order, 'unknown' when all scores are zero.
     """
     d = fan_out(load(spark, sf_dir, "documents"), spark)
-    toks = tokens_col("text")
-
-    def marker_score(markers: list[str]):
-        # NB: the lambda must take exactly one parameter — F.filter
-        # passes (element, index) to two-parameter lambdas.
-        return F.size(F.filter(toks, lambda t: t.isin(markers))).cast("bigint")
-
-    scores = {lang: marker_score(markers) for lang, markers in _LANG_MARKERS.items()}
-    pred = F.lit("unknown")
-    best = F.lit(0).cast("bigint")
-    # iterate in reverse so earlier languages win ties; zero scores
-    # never win (stay 'unknown')
-    for lang in reversed(list(_LANG_MARKERS)):
-        s = scores[lang]
-        pred = F.when((s >= best) & (s > 0), F.lit(lang)).otherwise(pred)
-        best = F.greatest(best, s)
-    sel = [F.col("doc_id"), F.col("lang").alias("lang_label")]
-    sel += [scores[lang].alias(f"score_{lang}") for lang in _LANG_MARKERS]
-    sel.append(pred.alias("lang_pred"))
-    return d.select(*sel).orderBy("doc_id")
+    lid = d.select("doc_id", "lang", marker_langid(tokens_col("text")).alias("lid"))
+    return lid.select(
+        "doc_id",
+        F.col("lang").alias("lang_label"),
+        *[F.col(f"lid.score_{lang}") for lang in LANG_MARKERS],
+        F.col("lid.pred").alias("lang_pred"),
+    ).orderBy("doc_id")
 
 
 def _sql_lang_score(lang: str) -> str:
-    markers = ", ".join(f"'{m}'" for m in _LANG_MARKERS[lang])
+    markers = ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
     return (
         f"CAST(len(list_filter(toks, t -> list_contains([{markers}], t)))"
         f" AS BIGINT)"
@@ -158,24 +138,30 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     position-sensitive (re-ordered words change the fingerprint),
     engine-exact, and computable in one map-only pass at any scale.
     """
-    d = fan_out(load(spark, sf_dir, "documents"), spark)
-    toks = tokens_col("text")
-    n = F.size(toks)
+    # toks is read twice below (fingerprint and count), so Catalyst
+    # keeps it as a column and the text is split once per row.
+    d = fan_out(load(spark, sf_dir, "documents"), spark).select(
+        "doc_id", tokens_col("text").alias("toks")
+    )
+    toks = F.col("toks")
     # a Literal array node; referenced INSIDE the transform lambda.
     # COSMETIC (ADVICE r12): the captured before/after physical plans
     # are identical (ConstantFolding folds CreateArray even inside the
     # lambda), so this is compile-convenience, not a runtime change.
     b_arr = F.lit(list(_POLY_B))
-    terms = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: (hash32(F.element_at(toks, i)) % MERSENNE_P)
-        * F.element_at(b_arr, ((i - 1) % 8) + 1)
-        % MERSENNE_P,
+    terms = bind(
+        toks,
+        lambda t: F.transform(
+            F.sequence(F.lit(1), F.size(t)),
+            lambda i: (hash32(F.element_at(t, i)) % MERSENNE_P)
+            * F.element_at(b_arr, ((i - 1) % 8) + 1)
+            % MERSENNE_P,
+        ),
     )
     fp = F.aggregate(terms, F.lit(0).cast("long"), lambda acc, x: acc + x) % MERSENNE_P
-    return d.select("doc_id", fp.alias("fingerprint"), n.cast("bigint").alias("n_tokens")).orderBy(
-        "doc_id"
-    )
+    return d.select(
+        "doc_id", fp.alias("fingerprint"), F.size(toks).cast("bigint").alias("n_tokens")
+    ).orderBy("doc_id")
 
 
 _B_SQL = "[" + ", ".join(str(b) for b in _POLY_B) + "]"
@@ -999,11 +985,17 @@ def text_watermark_greenlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact integer (g, n) per the round(·1e6) discipline (√ is
     IEEE-correctly-rounded, identical in both engines)."""
     d = fan_out(load(spark, sf_dir, "documents"), spark)
-    toks = tokens_col("text")
-    bigrams = shingles_col(toks, 2)
-    greens = F.filter(bigrams, lambda g: hash32(g) % WM_GAMMA_DEN == 0)
-    n = F.size(bigrams).cast("long")
-    g = F.size(greens).cast("long")
+    # Project the bigrams, then (n, g): each is read more than once
+    # below, so Catalyst keeps them as columns instead of re-deriving
+    # the bigram array (and re-splitting the text) per reference.
+    counts = d.select("doc_id", shingles_col(tokens_col("text"), 2).alias("bg")).select(
+        "doc_id",
+        F.size("bg").cast("long").alias("n"),
+        F.size(F.filter("bg", lambda b: hash32(b) % WM_GAMMA_DEN == 0))
+        .cast("long")
+        .alias("g"),
+    )
+    n, g = F.col("n"), F.col("g")
     gamma = 1.0 / WM_GAMMA_DEN
     z_micro = F.round(
         F.lit(1000000.0)
@@ -1011,7 +1003,7 @@ def text_watermark_greenlist(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.sqrt(n.cast("double") * F.lit(gamma * (1.0 - gamma)))
     ).cast("long")
     return (
-        d.select(
+        counts.select(
             "doc_id",
             n.alias("n_scored"),
             g.alias("n_green"),
@@ -1462,73 +1454,65 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact int64 products, and the final micro-score is one BIGINT
     integer division — bit-identical in both engines.
 
-    Scale: tf needs (doc × query-term) — a broadcast of the 3-term
-    literal, never a corpus shuffle; df/N/Σdl are one partial-agg
-    pass; top-{BM25_TOPK} is orderBy+limit = Spark's
+    Scale: one projection of each document's tokens yields its
+    length ``dl`` and the query-term ``tf``s; N, Σdl and the
+    ``df``s are one partial-agg pass over that same per-doc table,
+    broadcast back as one row.  No corpus shuffle, no term cross join.
+    A doc's score is the sum of its hit terms' scores, and
+    ``n_terms_hit`` = Σ[tfⱼ > 0].  Top-K is orderBy+limit = Spark's
     TakeOrderedAndProject (map-side heap per partition, only K rows
-    to the driver)."""
+    to the driver).  Hit docs sort first and the no-hit rows are
+    dropped after the limit: a ``tf > 0`` filter before it would be
+    pushed below ``fan_out``'s exchange and split each document once
+    per query term."""
     d = fan_out(load(spark, sf_dir, "documents"), spark)
-    t = d.select("doc_id", tokens_col("text").alias("tk"))
-    stats = t.agg(
+    tfs = [f"tf{j}" for j in range(len(BM25_QUERY))]
+
+    def term_freq(q: str) -> Column:
+        return F.size(F.filter("tk", lambda x: x == F.lit(q))).cast("long")
+
+    # tk is read once per term and once for dl, so it stays a column:
+    # each document is split once
+    per_doc = d.select("doc_id", tokens_col("text").alias("tk")).select(
+        "doc_id",
+        F.size("tk").cast("long").alias("dl"),
+        *[term_freq(q).alias(tf) for q, tf in zip(BM25_QUERY, tfs)],
+    )
+    stats = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size("tk")).cast("long").alias("sum_dl"),
+        F.sum("dl").cast("long").alias("sum_dl"),
+        *[F.count(F.when(F.col(tf) > 0, 1)).alias(f"df{j}") for j, tf in enumerate(tfs)],
     )
-    terms = spark.range(1).select(
-        F.explode(F.array(*[F.lit(q) for q in BM25_QUERY])).alias("term")
-    )
-    tf = (
-        t.crossJoin(F.broadcast(terms))
-        .select(
-            "doc_id",
-            "term",
-            F.size("tk").cast("long").alias("dl"),
-            F.size(
-                F.filter(F.col("tk"), lambda x: x == F.col("term"))
-            )
-            .cast("long")
-            .alias("tf"),
-        )
-        .filter(F.col("tf") > 0)
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            "term",
-            # dl·n_docs is (doc length)×(corpus count): BIGINT wraps
-            # at ~9.2e15 — decimal, mirrored by the oracle's HUGEINT
+    # dl·n_docs is (doc length)×(corpus count): BIGINT wraps at
+    # ~9.2e15 — decimal, mirrored by the oracle's HUGEINT
+    r_milli = "cast((1000 * cast(dl as decimal(19,0)) * n_docs) div sum_dl as bigint)"
+
+    def score(j: int) -> Column:
+        # numerator ~ 1e6·N·tf and denominator ~ df·tf are both
+        # N-scale products — decimal/HUGEINT end-to-end
+        tf, df = f"tf{j}", f"df{j}"
+        return F.when(
+            F.col(tf) > 0,
             F.expr(
-                "cast((1000 * cast(dl as decimal(19,0)) * n_docs)"
-                " div sum_dl as bigint)"
-            ).alias("r_milli"),
-            "tf",
-            "df",
-            "n_docs",
-        )
-        .select(
-            "doc_id",
-            "term",
-            # numerator ~ 1e6·N·tf and denominator ~ df·tf are both
-            # N-scale products — decimal/HUGEINT end-to-end
-            F.expr(
-                "cast((1000000 * cast(2 * (n_docs - df) + 1"
-                " as decimal(19,0)) * (2200 * tf))"
-                " div (cast(2 * df + 1 as decimal(19,0))"
-                "      * (1000 * tf + 300 + (9 * r_milli) div 10))"
+                f"cast((1000000 * cast(2 * (n_docs - {df}) + 1"
+                f" as decimal(19,0)) * (2200 * {tf}))"
+                f" div (cast(2 * {df} + 1 as decimal(19,0))"
+                f"      * (1000 * {tf} + 300 + (9 * {r_milli}) div 10))"
                 " as bigint)"
-            ).alias("score_micro"),
-        )
-    )
+            ),
+        ).otherwise(F.lit(0).cast("long"))
+
+    hits = sum((F.col(tf) > 0).cast("long") for tf in tfs)
     return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_hit"),
-            F.sum("score_micro").alias("bm25_micro"),
+        per_doc.crossJoin(F.broadcast(stats))
+        .select(
+            "doc_id",
+            hits.alias("n_terms_hit"),
+            sum(score(j) for j in range(len(tfs))).alias("bm25_micro"),
         )
-        .orderBy(F.desc("bm25_micro"), F.asc("doc_id"))
+        .orderBy(F.desc(F.col("n_terms_hit") > 0), F.desc("bm25_micro"), F.asc("doc_id"))
         .limit(BM25_TOPK)
+        .filter(F.col("n_terms_hit") > 0)
     )
 
 
@@ -2506,13 +2490,16 @@ def quality_wimbd_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fan_out(load(spark, sf_dir, "documents"), spark, "doc_id")
     toks = tokens_col("text")
     n = F.size(toks)
-    grams = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(0), n - 3),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = bind(
+        toks,
+        lambda t: F.when(
+            F.size(t) >= 3,
+            F.transform(
+                F.sequence(F.lit(0), F.size(t) - 3),
+                lambda i: F.concat_ws(" ", F.slice(t, i + 1, 3)),
+            ),
+        ).otherwise(F.array().cast("array<string>")),
+    )
     exploded = d.select(
         "doc_id", F.explode(grams).alias("gram")
     )

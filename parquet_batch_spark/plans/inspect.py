@@ -86,3 +86,19 @@ def global_window_count(df: DataFrame) -> int:
         if cls.endswith(".Window") and not node.get("partitionSpec"):
             n += 1
     return n
+
+
+def lambda_bodies(df: DataFrame) -> list[str]:
+    """Every ``lambdafunction(...)`` expression in the OPTIMIZED logical
+    plan, brace-matched (nested lambdas appear both inside their parent
+    and on their own). A per-row expression found here runs once per
+    lambda invocation, not once per row."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    bodies: list[str] = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, j = 1, m.end()
+        while depth and j < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        bodies.append(plan[m.start() : j])
+    return bodies

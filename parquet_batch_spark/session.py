@@ -52,7 +52,6 @@ def get_spark(app_name: str = "parquet_batch_spark", cpus: str | None = None) ->
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         # events.ts is parquet TIMESTAMP(NANOS) which Spark has no native
         # type for; read as raw nanos and convert in the catalog loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

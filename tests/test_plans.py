@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from parquet_batch_spark.operators.joins import join_broadcast_dims, join_range
@@ -18,6 +19,7 @@ from parquet_batch_spark.operators.scans import filter_pushdown, scan_projection
 from parquet_batch_spark.plans.inspect import (
     executed_plan,
     has_broadcast_join,
+    lambda_bodies,
     pushed_filters,
     read_schema_columns,
     whole_stage_codegen_spans,
@@ -761,3 +763,103 @@ def test_no_unbounded_driver_materialization():
         k for k in _DRIVER_MATERIALIZATION_WHITELIST if k not in found
     ]
     assert not stale, f"whitelist entries with no matching site: {stale}"
+
+
+def test_no_lambda_re_tokenizes_its_document(spark, sf_smoke, monkeypatch):
+    """Registry-wide: no lambda body in any optimized plan contains
+    ``split(``.  A split inside a ``lambdafunction(`` runs once per
+    lambda call (per shingle or segment window, per token), which is
+    O(tokens²) per document; tokens reach lambdas through
+    ``functions.text.bind``.  Shared stages are off so the audit sees
+    each stage's pipeline, not a checkpoint scan."""
+    from parquet_batch_spark import catalog
+    from parquet_batch_spark.operators import all_queries
+
+    monkeypatch.setattr(catalog, "MATERIALIZE_SHARED_STAGES", False)
+    offenders = {}
+    for name, fn in all_queries().items():
+        bad = [b for b in lambda_bodies(fn(spark, sf_smoke)) if "split(" in b]
+        if bad:
+            offenders[name] = bad[0][:300]
+    assert not offenders, f"split( inside a lambda: {offenders}"
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """Line ``i`` of a plan tree string and every line below it."""
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :|+-"))
+
+    out = [lines[i]]
+    for line in lines[i + 1 :]:
+        if depth(line) <= depth(lines[i]):
+            break
+        out.append(line)
+    return out
+
+
+def test_lsh_band_join_reuses_its_exchange(spark, sf_smoke, monkeypatch):
+    """The band self-join is a shuffled join whose two sides read one
+    Exchange on (band_idx, band_sig): the band table (shingles, md5s,
+    signatures) is computed once.  A broadcast self-join would
+    recompute its build side from the scan."""
+    from parquet_batch_spark import catalog
+    from parquet_batch_spark.operators.dedup import _lsh_candidate_pairs
+
+    monkeypatch.setattr(catalog, "MATERIALIZE_SHARED_STAGES", False)
+    df = _lsh_candidate_pairs(spark, sf_smoke)
+    df.collect()
+    final = executed_plan(df).split("== Initial Plan ==")[0]
+    assert "SortMergeJoin" in final and "BroadcastHashJoin" not in final, final
+    reused = [ln for ln in final.splitlines() if "ReusedExchange" in ln]
+    assert len(reused) == 1 and "hashpartitioning(band_idx" in reused[0], final
+
+
+def test_bm25_tokenizes_once_per_scan_after_fan_out(spark, sf_smoke):
+    """BM25 splits each document at most once per ``documents`` scan,
+    and every split runs above an Exchange (after ``fan_out``'s
+    repartition), never in the scan's own stage — where a pushed-down
+    ``tf > 0`` filter would split each document once per term."""
+    from parquet_batch_spark.operators.text_analysis import text_bm25_topk
+
+    lines = executed_plan(text_bm25_topk(spark, sf_smoke)).splitlines()
+    scans = sum("FileScan parquet" in ln and "documents" in ln for ln in lines)
+    splits = [i for i, ln in enumerate(lines) if "split(" in ln]
+    assert scans and sum(lines[i].count("split(") for i in splits) <= scans, lines
+    for i in splits:
+        assert any("Exchange" in ln for ln in _subtree(lines, i)[1:]), lines[i]
+
+
+_MARKER_LANGID_OPS = (
+    "text_langid",
+    "quality_langid_confusion",
+    "agg_cohen_kappa",
+    "agg_mcnemar_test",
+    "quality_krippendorff_alpha",
+)
+
+
+@pytest.mark.parametrize("name", _MARKER_LANGID_OPS)
+def test_marker_langid_splits_once_per_scan(spark, sf_smoke, monkeypatch, name):
+    """The marker classifier (``functions.text.marker_langid``) binds
+    the tokens once and computes each language score once, so the
+    optimized plan holds one ``split(`` per ``documents`` scan.  The
+    frames an op checkpoints while building are audited too."""
+    from parquet_batch_spark.operators import all_queries
+
+    cls = type(spark.range(1))
+    checkpoint, frames = cls.localCheckpoint, []
+
+    def recording(self, *args, **kwargs):
+        frames.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    frames.append(all_queries()[name](spark, sf_smoke))
+    n_scans = 0
+    for df in frames:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        scans = len(re.findall(r"Relation \[[^\]]*\btext#", plan))
+        assert plan.count("split(") == scans, plan[:3000]
+        n_scans += scans
+    assert n_scans >= 1

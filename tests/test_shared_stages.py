@@ -7,11 +7,14 @@ unchanged fixture keeps returning the cached object.
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 DIM = 8
+_GROUPS = itertools.count()
 
 
 def _texts(n: int, dup: tuple[int, int]) -> list[str]:
@@ -84,3 +87,49 @@ def test_rewrite_in_place_recomputes_shared_stages(spark, tmp_path):
     assert k2 == _ivf_k(300) == 18
     assert cents2.shape == (18, DIM) and (cents2 < 0).all()
     assert _lsh_candidate_pairs(spark, sf_dir) is not cands
+
+
+def _load_jobs(spark, sf_dir: str, name: str):
+    """``catalog.load`` plus the ids of the Spark jobs it fired."""
+    from parquet_batch_spark.catalog import load
+
+    sc = spark.sparkContext
+    group = f"load-{next(_GROUPS)}"
+    sc.setJobGroup(group, "load")
+    try:
+        df = load(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_table_schema_inferred_once_per_table_version(spark, tmp_path):
+    """``load`` reads with the cached ``table_schema``: a second load of
+    the same files fires no schema-inference job, a rewrite in place
+    (here, an added column) re-infers, and so does a change to a
+    Parquet type-conversion conf."""
+    sf_dir = str(tmp_path)
+    _write_fixture(tmp_path, n_docs=6, dup=(1, 2), n_vecs=20, sign=1.0)
+    df, jobs = _load_jobs(spark, sf_dir, "documents")
+    assert jobs and "blob" not in df.columns
+    df, jobs = _load_jobs(spark, sf_dir, "documents")
+    assert not jobs and df.count() == 6
+
+    table = pq.read_table(str(tmp_path / "documents.parquet"))
+    table = table.append_column("blob", pa.array([b"x%d" % i for i in range(6)]))
+    pq.write_table(table, str(tmp_path / "documents.parquet"))
+    df, jobs = _load_jobs(spark, sf_dir, "documents")
+    assert jobs and dict(df.dtypes)["blob"] == "binary"
+    assert df.orderBy("doc_id").first()["blob"] == b"x0"
+
+    key = "spark.sql.parquet.binaryAsString"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        df, jobs = _load_jobs(spark, sf_dir, "documents")
+        assert jobs and dict(df.dtypes)["blob"] == "string"
+        assert df.orderBy("doc_id").first()["blob"] == "x0"
+    finally:
+        spark.conf.set(key, old)
+    df, jobs = _load_jobs(spark, sf_dir, "documents")
+    assert not jobs and dict(df.dtypes)["blob"] == "binary"
