@@ -8,7 +8,6 @@ table roots; the loader is path-based so the same code serves both.
 from __future__ import annotations
 
 import functools
-import logging
 import os
 from collections.abc import Callable
 
@@ -28,13 +27,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Dimension tables small enough to broadcast at ANY scale factor: the
-# TPC-H spec fixes region at 5 rows and nation at 25 rows regardless of
-# SF, so broadcasting is always correct. customer/supplier/part grow
-# with SF — broadcastability is decided per-query (AQE converts to
-# broadcast when the built side is under the threshold at runtime).
-ALWAYS_BROADCAST = frozenset({"region", "nation"})
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -197,88 +189,6 @@ def count_table(spark: SparkSession, sf_dir: str, name: str) -> int:
     return load(spark, sf_dir, name).count()
 
 
-_BYTE_SUFFIX = {
-    "b": 1,
-    "k": 1 << 10,
-    "kb": 1 << 10,
-    "m": 1 << 20,
-    "mb": 1 << 20,
-    "g": 1 << 30,
-    "gb": 1 << 30,
-    "t": 1 << 40,
-    "tb": 1 << 40,
-    "p": 1 << 50,
-    "pb": 1 << 50,
-}
-
-
-def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
-    """Read a Spark byte-size conf ("128MB", "4194304b", plain int) as
-    bytes, with a fixed fallback.  Parsing mirrors Spark's
-    JavaUtils.byteStringAs: case-insensitive suffix, binary units, the
-    full b/k/m/g/t/p ladder, integer-only magnitude.  An unparseable
-    value (which Spark itself would reject at read time) is WARNED
-    about, not silently defaulted — the estimate this feeds exists to
-    match Spark's actual packing (ADVICE r9)."""
-    try:
-        raw = spark.conf.get(key, None)
-    except Exception:  # noqa: BLE001 — unreadable conf: use the default
-        raw = None
-    if raw is None:
-        return default
-    s = str(raw).strip().lower()
-    num = s.rstrip("bgkmpt")
-    suffix = s[len(num):]
-    try:
-        return int(num) * _BYTE_SUFFIX[suffix or "b"]
-    except (ValueError, KeyError):
-        logging.getLogger(__name__).warning(
-            "unparseable byte conf %s=%r; pack estimate falls back to %d",
-            key, raw, default,
-        )
-        return default
-
-
-def _spark_pack_estimate(
-    sizes: list[int],
-    target: int,
-    max_partition_bytes: int = 128 << 20,
-    open_cost: int = 4 << 20,
-) -> int:
-    """Partition count Spark's FilePartition.getFilePartitions yields
-    for files of the given byte sizes at the given read configs
-    (defaults = Spark's: maxPartitionBytes 128 MiB, openCostInBytes
-    4 MiB; fan_out reads the live session values — ADVICE r8: a
-    deployment overriding them would silently diverge from Spark's
-    actual packing), reproduced step-for-step: the split size pads
-    every file with the open cost, each file is chunked at the split
-    size (only REAL bytes split), and chunks greedy-pack largest-first,
-    closing a partition when the next chunk's real bytes would
-    overflow it (the open cost is charged per packed chunk, not
-    chunked itself — which is why a plain ceil(totalWithCost/split)
-    over-counts near the boundary: one 10 MB file at target 4
-    estimates 4 but Spark packs 3)."""
-    total = sum(sizes) + open_cost * len(sizes)
-    split = min(max_partition_bytes, max(open_cost, total // max(target, 1)))
-    chunks = []
-    for s in sizes:
-        n_full, rem = divmod(s, split)
-        chunks.extend([split] * n_full)
-        # a zero-length file yields NO chunk (Spark's splitFiles loop
-        # `0 until length by split` is empty), so it must not charge
-        # an open cost at pack time either
-        if rem:
-            chunks.append(rem)
-    chunks.sort(reverse=True)
-    est, cur = 0, 0
-    for c in chunks:
-        if est == 0 or cur + c > split:
-            est += 1
-            cur = 0
-        cur += c + open_cost
-    return max(1, est)
-
-
 def fan_out(df: DataFrame, spark: SparkSession, *cols: str) -> DataFrame:
     """Widen a small scan feeding a computation-heavy derivation.
 
@@ -290,72 +200,25 @@ def fan_out(df: DataFrame, spark: SparkSession, *cols: str) -> DataFrame:
     and this is a no-op — the guard makes the helper safe to apply
     unconditionally.
 
+    The scan's partition count is Spark's own: the summed
+    ``inputRDD`` partitions of the ``FileSourceScanExec`` leaves in
+    the frame's pre-AQE physical plan, so every read conf Spark honours
+    (maxPartitionBytes, openCostInBytes, minPartitionNum,
+    maxPartitionNum) is honoured here too.  Building those RDDs lists
+    and splits the files on the driver; it runs no Spark job.  A frame
+    with no file scan (driver-created or checkpointed) counts 0 and is
+    spread.
+
     Pass key columns when downstream groups/joins on them: hash
     partitioning on the key lets Catalyst elide the next shuffle.
     """
     target = spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    est = len(files)
-    if files:
-        # File count alone mis-estimates in BOTH directions: one big
-        # file arrives as many 128 MiB splits, and many SMALL files are
-        # bin-packed into far fewer partitions (maxPartitionBytes +
-        # openCostInBytes), so `len(files) >= target` can still mean an
-        # under-parallelized scan.  For stat-able local paths reproduce
-        # Spark's own packing exactly (see _spark_pack_estimate).
-        # Remote URIs keep the file count (a 100 TB table has >> cores
-        # files anyway, and at that scale this helper is a no-op).
-        try:
-            from urllib.parse import urlparse
-
-            sizes = []
-            for uri in files:
-                parsed = urlparse(uri)
-                if parsed.scheme not in ("file", ""):
-                    raise OSError(uri)  # remote: fall back to count
-                sizes.append(os.path.getsize(parsed.path))
-            # Spark derives the split size from minPartitionNum (conf,
-            # else leafNodeDefaultParallelism, else defaultParallelism)
-            # — match that, not the spread target.  A malformed conf
-            # string degrades to target instead of crashing the query
-            # (ADVICE r9: ValueError escaped the OSError-only catch).
-            try:
-                min_parts = spark.conf.get(
-                    "spark.sql.files.minPartitionNum", None
-                )
-                if min_parts is None:
-                    min_parts = spark.conf.get(
-                        "spark.sql.leafNodeDefaultParallelism", None
-                    )
-                min_parts = int(min_parts) if min_parts else target
-            except (ValueError, TypeError):
-                min_parts = target
-            est = _spark_pack_estimate(
-                sizes,
-                min_parts,
-                _bytes_conf(
-                    spark, "spark.sql.files.maxPartitionBytes", 128 << 20
-                ),
-                _bytes_conf(
-                    spark, "spark.sql.files.openCostInBytes", 4 << 20
-                ),
-            )
-        except OSError:
-            pass
-    # est == 0 (non-file-backed plan): partition count is unknowable
-    # without materializing the RDD (banned — .rdd conversion costs a
-    # full analysis pass).  Callers only hand this helper raw scans or
-    # small driver-created frames, so the unconditional spread is the
-    # safe default there.
-    if est >= target:
+    parts = 0
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            parts += leaf.inputRDD().getNumPartitions()
+    if parts >= target:
         return df
     return df.repartition(target, *cols) if cols else df.repartition(target)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() can see them."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -88,10 +88,6 @@ def r6(col: Column, alias: str | None = None) -> Column:
 
 # ---- Oracle-side (DuckDB) SQL fragments mirroring the helpers above ----
 
-def sql_dec(expr: str) -> str:
-    return f"CAST(({expr}) AS DECIMAL(18,4))"
-
-
 def sql_dsum(expr: str) -> str:
     return (
         f"CAST(CAST(SUM(CAST(({expr}) AS DECIMAL(18,4))) AS DECIMAL(18,6))"

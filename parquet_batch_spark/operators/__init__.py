@@ -25,73 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 # Registry emission order.  The correctness driver hard-checks only the
 # first ~50 registry entries per round, so ordering is coverage policy.
 #
-# ROTATION LEDGER (update every round; goal: every entry re-verified at
-# least every third round):
-#   r1 window: the first 50 in module order — scans/sources/relational/
-#     joins/tpch + window_distribution.  48 green; source_json_roundtrip
-#     + tpch_q12 hash-failed (Arrow int-width oracle casts).
-#   r2 window: the 48 r1-unchecked (windows, analytics, scalar funcs,
-#     UDFs, text, dedup, similarity, multimodal, streaming) + the two
-#     repaired r1 fails.  46 green; 4 ERRs (2 array-column outputs,
-#     2 no-oracle rows-only) — all four repaired in r3.
-#   r3 window: 27 never-checked r2-new + 4 repaired ERRs + 19 stalest
-#     r1 greens (scans/sources/sinks/joins/q1/agg_distinct).  49 green;
-#     ann_ivf_topk no_oracle (rows-only then — oracle added in r4).
-#   r4 window: slots 1-45 = the 45 continuation-session ops, 46 =
-#     join_interval_bucketed, 47 = ann_ivf_topk (first hash check),
-#     48-50 = mapInArrow/hll_union/scan_files_metadata.  50/50 green.
-#   r5 window: slots 1-9 = the ops CHANGED this round
-#     (3 int64 second-moment overflow fixes, 2 oracle-portability
-#     fixes, 4 dedup ops touched by the absolute shingle cap / shared
-#     intersection pass / CC rewrite), slots 10-50 = 41 never-checked
-#     stats_ops entries.  45 of 50 slots are stats_ops (VERDICT r4 #1).
-#   r6 window (this ordering): 225 never-driver-checked entries lead,
-#     strictly never-checked-first (VERDICT r5 #1).  Slots 1-6 = the
-#     six never-checked streaming patterns (VERDICT r5 #7), slots
-#     7-50 = 44 never-checked stats_ops in registry order.  Behind the
-#     window: the remaining 30 stats_ops, text_analysis (18),
-#     llm_prep (16), then the other modules' never-checked in module
-#     order — so r7/r8 windows are pre-staged.  Arithmetic note: with
-#     a 50-slot window the never-checked count floors at 225-50=175
-#     plus any r6-new ops; sub-160 needs two more registry-frozen
-#     rounds.
-#   r7 window (this ordering): 3 changed ops + 1 new op lead, then
-#     never-checked llm_prep/text_analysis/similarity (VERDICT r6 #1:
-#     the least-certified north-star families).  50/50 first-time;
-#     never-checked drops 195 -> 145 (incl. the one r7-new op).
-#   r8 window (this ordering): VERDICT r7 #1 — the full 50-slot
-#     window never-checked-first, north-star families before the stats
-#     tail: similarity's last 3, multimodal 10, pipeline_ops 11,
-#     dedup 8, corpus_ops 8, udfs 3, scale_ops 4, scans 1 (= 48),
-#     topped up with 2 warehouse entries.  Clears dedup/similarity/
-#     multimodal/pipeline_ops/corpus_ops to 0 judge-only; never-checked
-#     drops 145 -> 95.
-#   r9 window (this ordering): VERDICT r8 #1 — the pre-staged tail:
-#     34 stats_ops + 13 relational + 3 scalar_funcs head, all
-#     never-driver-checked (pre-verified fresh-process 50/50 in 78 s at
-#     the r8 closing tree).  Never-checked drops 95 -> 45.
-#   r10 pre-stage (VERDICT r8 #5): the remaining 45 never-checked
-#     (scalar_funcs 9, sources_ext 10, warehouse 7, joins 7, windows 7,
-#     analytics 5) — full driver certification of all 466 lands at r10.
-#     The 5 spare slots go to the 5 STALEST r1-certified entries in
-#     registry order (reshape_unpivot, agg_rollup, agg_cube,
-#     agg_grouping_sets, agg_pivot — r1 window, never re-checked since;
-#     29 r1-stale entries remain in total, the rest cycle from r11).
-#   r10 window (this ordering, VERDICT r9 #1): the pre-staged 45
-#     never-checked + 5 stalest-r1 spares ROTATED to slots 1-50
-#     (_R10_WINDOW below — byte-identical to the composition the judge
-#     pre-verified 50/50 green).  Closes full 466/466 certification.
-#   r11+ STANDING ROTATION POLICY (VERDICT r9 #2 — now MECHANICAL, no
-#     per-round decision or hand-pinned list needed): once
-#     CORRECTNESS_r10 lands, ``current_window()`` computes each round's
-#     window as the 50 entries whose most recent driver check is OLDEST
-#     (stalest-first, by last-checked round from CORRECTNESS_r*.json;
-#     ties broken by module order — the stable, rotation-independent
-#     ordering), EXCEPT that any op whose code or oracle changed that
-#     round jumps to slot 1 (list it in _CHANGED_THIS_ROUND by hand —
-#     the code can't see the diff).  At 466 entries and a 50-slot
-#     window, every op is re-certified at least every ~10 rounds; ops
-#     never touched after certification cycle on schedule.
+# Rotation is mechanical: ``current_window()`` puts the ops changed this
+# round first (``_CHANGED_THIS_ROUND``), then the entries whose most
+# recent driver check is oldest (by last-checked round from
+# CORRECTNESS_r*.json; ties broken by module order).  At 466 entries and
+# a 50-slot window every op is re-certified at least every ~10 rounds.
 
 # Ops whose implementation or oracle changed, keyed by the round the
 # change happened in.  They jump to the window head (displacing the
@@ -252,71 +190,6 @@ _CHANGED_THIS_ROUND: dict[str, int] = {
 
 _WINDOW_SIZE = 50
 
-# The judge-pre-verified r10 window (VERDICT r8 #5 / r9 #1): the 45
-# entries never seen in CORRECTNESS_r01-r09 + the 5 stalest
-# r1-certified spares.  Frozen as a literal so the r10 composition
-# cannot drift; r11+ windows are computed, not pinned.
-_R10_WINDOW = [
-    # --- r10: remaining scalar_funcs ---
-    "func_geohash_encode",
-    "func_csv_struct",
-    "sql_named_params",
-    "func_struct_field_ops",
-    "func_regexp",
-    "func_collation",
-    "func_try_arith",
-    "func_url",
-    "func_bitwise",
-    # --- r10: sources_ext ---
-    "scan_schema_evolution",
-    "source_text_lines",
-    "source_xml_roundtrip",
-    "source_jsonl_corrupt_tolerant",
-    "sink_retention_prune",
-    "source_multiformat_union",
-    "source_python_datasource",
-    "sink_dynamic_partition_overwrite",
-    "scan_ignore_corrupt",
-    "sink_compression_codecs",
-    # --- r10: warehouse tail ---
-    "etl_foreign_key_audit",
-    "etl_late_arriving_dimension",
-    "etl_time_travel",
-    "etl_data_vault_keys",
-    "etl_write_audit_publish",
-    "etl_snapshot_diff",
-    "etl_cdc_apply",
-    # --- r10: joins ---
-    "join_null_aware_anti",
-    "join_point_in_time_scd2",
-    "join_nearest_price",
-    "join_lateral_topk",
-    "join_null_safe",
-    "join_asof_tolerance",
-    "join_bloom_prefilter",
-    # --- r10: windows ---
-    "window_allen_interval_relations",
-    "window_bollinger_breaches",
-    "window_streak_islands",
-    "window_nth_value",
-    "window_percent_change",
-    "window_running_distinct",
-    "window_rolling_median",
-    # --- r10: analytics ---
-    "agg_hodges_lehmann",
-    "rollup_downsample_ltob",
-    "agg_benford_profile",
-    "explode_positional_tokens",
-    "agg_moments_exact",
-    # --- r10 spare slots 46-50 (VERDICT r8 #5): 5 stalest r1-certified ---
-    "reshape_unpivot",
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_pivot",
-]
-
-
 _MODULES = [
     "parquet_batch_spark.operators.scans",
     "parquet_batch_spark.operators.sources_ext",
@@ -424,21 +297,12 @@ def _stalest_window(
 
 
 def current_window(names: list[str] | None = None) -> list[str]:
-    """This round's driver-check window (registry slots 1-N).
-
-    Through r10 this is the judge-pre-verified ``_R10_WINDOW`` literal
-    (closing full certification); once a round-10+ CORRECTNESS artifact
-    exists, the mechanical stalest-first rotation takes over — no
-    hand-pinned list ever again (VERDICT r9 #2)."""
+    """This round's driver-check window (registry slots 1-N): the
+    mechanical stalest-first rotation of ``_stalest_window``."""
     if names is None:
         names = list(_raw_queries())
     seen = dict(_last_checked())
-    changed = _active_changed(seen)
-    if max(seen.values(), default=0) < 10:
-        window = [n for n in _R10_WINDOW if n in set(names)]
-        head = [n for n in changed if n in set(names)]
-        return (head + [n for n in window if n not in head])[:_WINDOW_SIZE]
-    return _stalest_window(names, seen, changed)
+    return _stalest_window(names, seen, _active_changed(seen))
 
 
 def _prioritized(mapping: dict) -> dict:

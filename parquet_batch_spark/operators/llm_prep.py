@@ -861,7 +861,6 @@ ORDER BY stage
 # sample_temperature_mixture
 # ------------------------------------------------------------------
 
-TEMP_TAU_NOTE = "tau = 0.5 (sqrt scaling)"
 TEMP_Q = 1_000_000  # weight quantization (micro-units)
 
 

@@ -17,8 +17,6 @@ written identically in both engines and rounded to 6 decimals.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,32 +24,6 @@ from parquet_batch_spark.catalog import count_table, fan_out, load
 from parquet_batch_spark.functions.hashing import hash32, sql_hash32
 from parquet_batch_spark.functions.text import bind, marker_langid, sql_tokens, tokens_col
 
-
-@contextmanager
-def _trimmed_shuffle_partitions(spark: SparkSession, n: int):
-    """Scope a ``spark.sql.shuffle.partitions`` trim around an EAGER
-    execution of a tiny-cardinality fixpoint (Bradley-Terry MM rounds,
-    the Holt recursive CTE): each round's exchanges move at most a few
-    hundred rows, so the per-partition task-scheduling floor — not
-    data — dominates, and 1-4 partitions cut wall time ~35 %.
-
-    The conf is session-global, so a trim while ANOTHER thread runs a
-    query in the same session would narrow that query's shuffles too.
-    Guard: if any Spark job is already active on this context (the
-    only way concurrent work can exist in one session), SKIP the trim
-    and run at full width — always correct, merely slower.  In the
-    single-threaded driver/bench/test harness the tracker is idle here
-    and the trim applies.  Restores the previous value in ``finally``.
-    """
-    if spark.sparkContext.statusTracker().getActiveJobsIds():
-        yield
-        return
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 # ---------------------------------------------------------------------------
 # agg_regression_per_group — closed-form OLS trend per group

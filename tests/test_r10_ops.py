@@ -1,47 +1,9 @@
-"""Round-10 advisory fixes (ADVICE r9): byte-conf suffix coverage,
-graceful degrade on malformed partition confs, and bench_compare's
-robust trend estimator."""
+"""Round-10 advisory fixes (ADVICE r9): bench_compare's robust trend
+estimator, and the SemDeDup cell cap."""
 
 from __future__ import annotations
 
-import logging
-
 import pytest
-
-
-def test_bytes_conf_petabyte_suffixes_and_warning(spark, caplog):
-    """ADVICE r9 #1: p/pb belong to Spark's byteStringAs ladder, and an
-    unparseable value must be loudly warned about, not silently
-    defaulted (the estimate exists to match Spark's real packing)."""
-    from parquet_batch_spark.catalog import _bytes_conf
-
-    for raw, want in [("1p", 1 << 50), ("2pb", 2 << 50), ("3P", 3 << 50)]:
-        spark.conf.set("pbs.test.pb_size", raw)
-        assert _bytes_conf(spark, "pbs.test.pb_size", -1) == want, raw
-    # fractional magnitudes are invalid in Spark too — fall back, warn
-    spark.conf.set("pbs.test.pb_size", "1.5m")
-    with caplog.at_level(logging.WARNING, logger="parquet_batch_spark.catalog"):
-        assert _bytes_conf(spark, "pbs.test.pb_size", 7) == 7
-    assert any("unparseable byte conf" in r.getMessage() for r in caplog.records)
-
-
-def test_fan_out_survives_malformed_min_partition_num(spark, monkeypatch):
-    """ADVICE r9 #2: a malformed spark.sql.files.minPartitionNum (e.g.
-    from spark-defaults, never validated by a typed getter) must degrade
-    to the parallelism target, not crash the query with ValueError."""
-    from parquet_batch_spark.catalog import fan_out, load
-
-    real_get = spark.conf.get
-
-    def fake_get(key, default=None):
-        if key == "spark.sql.files.minPartitionNum":
-            return "not-a-number"
-        return real_get(key, default)
-
-    monkeypatch.setattr(spark.conf, "get", fake_get)
-    df = load(spark, "/root/testdata/sf0.001", "region")
-    out = fan_out(df, spark)
-    assert out.count() == df.count()
 
 
 def test_bench_compare_median_headline():

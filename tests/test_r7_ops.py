@@ -224,109 +224,86 @@ def test_overflow_swept_expressions_survive_web_scale(spark):
 
 
 def test_fan_out_bin_packing_estimate(spark, tmp_path):
-    """fan_out's parallelism estimate reproduces Spark's file
-    bin-packing EXACTLY (ADVICE r7 replaced the ceil(totalWithCost/
-    split) approximation, which over-counted near boundaries and
-    skipped spreads the contract intends), so its skip/spread
-    decision must equal `actual partitions >= target`:
+    """fan_out spreads exactly when Spark's own scan has fewer
+    partitions than defaultParallelism, and a spread frame has
+    defaultParallelism partitions.  The count is read off the planned
+    scan, so every read conf Spark applies to its file packing moves
+    the decision with it:
 
-    - many tiny files: openCost bin-packing usually lands BELOW
-      target (floor(split/openCost)+1 chunks per bin), so the spread
-      the old estimate skipped must now happen,
+    - many tiny files: openCost bin-packing can land BELOW target
+      even with more files than cores,
     - ONE small file: one input split -> the spread must happen
       (this is the case the helper exists for),
-    - a non-file-backed frame: documented safe default is to spread.
+    - one ~10 MB file at default confs, where the open-cost padding
+      puts the packing just below the boundary (3 partitions at 4
+      cores),
+    - the same file at maxPartitionBytes=2m, which splits it wider,
+    - a scan Spark caps with spark.sql.files.maxPartitionNum below
+      target although its natural packing reaches it,
+    - a non-file-backed frame: counts 0, so it is spread.
     """
+    import os
+
     from parquet_batch_spark.catalog import fan_out
 
     target = spark.sparkContext.defaultParallelism
+
+    def check(df):
+        actual = df.rdd.getNumPartitions()
+        out = fan_out(df, spark)
+        if actual >= target:
+            assert out is df  # no redundant shuffle
+        else:
+            assert out is not df  # under-parallelized scan: must spread
+            assert out.rdd.getNumPartitions() == target
+        return actual
+
+    def check_under(confs, path):
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            return check(spark.read.parquet(path))
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
     tiny = str(tmp_path / "tiny")
     spark.range(2 * target).repartition(2 * target).write.parquet(tiny)
     df = spark.read.parquet(tiny)
     assert len(df.inputFiles()) >= target
-    actual = df.rdd.getNumPartitions()
-    out = fan_out(df, spark)
-    if actual >= target:
-        assert out is df  # no redundant shuffle
-    else:
-        assert out is not df  # under-parallelized scan: must spread
-        assert out.rdd.getNumPartitions() == target
+    check(df)
 
     one = str(tmp_path / "one")
     spark.range(10_000).coalesce(1).write.parquet(one)
-    dfo = spark.read.parquet(one)
-    assert dfo.rdd.getNumPartitions() < target
-    out1 = fan_out(dfo, spark)
-    assert out1 is not dfo
-    assert out1.rdd.getNumPartitions() == target
+    assert check(spark.read.parquet(one)) < target
 
-    mem = spark.range(100)
-    out2 = fan_out(mem, spark)
-    assert out2.rdd.getNumPartitions() == target
-
-
-def test_pack_estimate_matches_spark_exactly(spark, tmp_path):
-    """_spark_pack_estimate reproduces Spark's FilePartition packing
-    byte-for-byte on real scans, including ADVICE r7's boundary case
-    (one file a bit over 2 split sizes, where the old
-    ceil(totalWithCost/split) over-counted by one and fan_out skipped
-    a spread it should have made)."""
-    import os
-
-    from parquet_batch_spark.catalog import _spark_pack_estimate
-
-    target = spark.sparkContext.defaultParallelism
-
-    # ~10 MB single file: with openCost padding the split lands near
-    # total/target, so the estimate sits exactly on the boundary the
-    # advisor flagged (est must equal Spark's packing, not exceed it)
     big = str(tmp_path / "big")
     spark.range(1_500_000).select(
         F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("pad")
     ).coalesce(1).write.parquet(big)
-    for path in (big, str(tmp_path / "big2")):
-        if path != big:
-            spark.range(40_000).repartition(6).write.parquet(path)
-        df = spark.read.parquet(path)
-        sizes = [
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ]
-        est = _spark_pack_estimate(sizes, target)
-        actual = df.rdd.getNumPartitions()
-        assert est == actual, (path, sizes, est, actual)
+    default_parts = check(spark.read.parquet(big))
+    narrow = {"spark.sql.files.maxPartitionBytes": "2m"}
+    assert check_under(narrow, big) > default_parts
 
-    # zero-length files yield NO chunk in Spark's splitFiles (the
-    # `0 until length by split` loop is empty), so they must not add
-    # partitions or charge pack-time open cost — they only pad the
-    # split-size derivation's totalBytes, as Spark's arithmetic does
-    ten_mb = 10 << 20
-    assert _spark_pack_estimate([0, 0, 0], target) == 1
-    # the zero-padded layout's totalBytes carries 4 open costs, so its
-    # split only reaches the 4 MiB openCost floor at target >= 6
-    # (27 MiB-ish total / 6 < floor); below that the layouts pack
-    # differently BY SPARK'S OWN ARITHMETIC (ADVICE r8: the old literal
-    # `== 3` failed on hosts with defaultParallelism <= 5 even though
-    # the estimate was correct) — pin the floor case at a fixed target
-    # instead of the host's core count, then sanity-check the host
-    # value against an explicit re-derivation of the split formula
-    assert (
-        _spark_pack_estimate([0, 0, 0, ten_mb], 8)
-        == _spark_pack_estimate([ten_mb], 8)
-        == 3
+    # split the file into ~2 x target chunks, then cap the scan at half
+    # the target: Spark re-packs to the cap, and fan_out must spread
+    size = sum(
+        os.path.getsize(os.path.join(big, f))
+        for f in os.listdir(big)
+        if f.endswith(".parquet")
     )
-    open_cost = 4 << 20
-    for sizes in ([0, 0, 0, ten_mb], [ten_mb]):
-        split = min(
-            128 << 20,
-            max(open_cost, (sum(sizes) + open_cost * len(sizes)) // target),
-        )
-        n_full, rem = divmod(ten_mb, split)
-        # every chunk + its open cost exceeds the split here, so each
-        # chunk packs alone: expected = chunk count
-        assert _spark_pack_estimate(sizes, target) == n_full + (1 if rem else 0)
+    wide = {"spark.sql.files.maxPartitionBytes": str(size // (2 * target))}
+    assert check_under(wide, big) >= target
+    capped = {**wide, "spark.sql.files.maxPartitionNum": str(max(1, target // 2))}
+    n_capped = check_under(capped, big)
+    assert n_capped < target or target == 1
+
+    out = fan_out(spark.range(100), spark)
+    assert out.rdd.getNumPartitions() == target
 
 
 def test_overflow_swept_rank_and_moment_sums_survive_web_scale(spark):

@@ -1,10 +1,8 @@
 """Registry integrity: the driver checks roughly the first 50 entries,
 so ordering is coverage policy — guard it against silent drift.
 
-From r10 the window is computed (``current_window``), not hand-pinned:
-through r10 it is the judge-pre-verified ``_R10_WINDOW`` literal; once
-a round-10+ CORRECTNESS artifact lands, the mechanical stalest-first
-rotation takes over (VERDICT r9 #2)."""
+The window is computed (``current_window``), not hand-pinned: the
+mechanical stalest-first rotation (VERDICT r9 #2)."""
 
 from __future__ import annotations
 
@@ -14,7 +12,6 @@ import os
 import re
 
 from parquet_batch_spark.operators import (
-    _R10_WINDOW,
     _WINDOW_SIZE,
     _entry_green,
     _last_checked,
@@ -27,12 +24,11 @@ from parquet_batch_spark.operators import (
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _ever_checked(through_round: int = 10**6) -> set[str]:
+def _ever_checked() -> set[str]:
     """Driver-checked names recorded in CORRECTNESS_r*.json artifacts."""
     checked: set[str] = set()
     for f in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
-        m = re.match(r"CORRECTNESS_r(\d+)\.json$", os.path.basename(f))
-        if m and int(m.group(1)) <= through_round:
+        if re.match(r"CORRECTNESS_r(\d+)\.json$", os.path.basename(f)):
             checked.update(json.load(open(f)))
     return checked
 
@@ -75,31 +71,6 @@ def test_certification_closes_after_this_window():
     assert uncovered == [], f"entries certification can never reach: {uncovered}"
 
 
-def test_round10_window_matches_judge_preverified_composition():
-    """Until CORRECTNESS_r10 lands, slots 1-50 must be the composition
-    the judge pre-verified 50/50 green (VERDICT r9 #1) — the 45 entries
-    never checked in r01-r09 + stalest-r1 spares — except that ops in
-    _CHANGED_THIS_ROUND jump to the head per the standing policy,
-    displacing spares only (never one of the 45)."""
-    from parquet_batch_spark.operators import _active_changed
-
-    seen = dict(_last_checked())
-    if max(seen.values(), default=0) >= 10:
-        return  # r10 landed — the mechanical rotation owns the window
-    changed = _active_changed(seen)
-    window = current_window()
-    n_changed = len(changed)
-    assert window[:n_changed] == changed
-    kept = [n for n in _R10_WINDOW if n not in changed]
-    assert window[n_changed:] == kept[: _WINDOW_SIZE - n_changed]
-    checked_r9 = _ever_checked(9)
-    never = [n for n in window if n not in checked_r9]
-    assert len(never) == 45, f"expected 45 never-checked in window, got {len(never)}"
-    # changed ops may only displace spares (re-checks), never the 45
-    displaced = set(_R10_WINDOW) - set(window)
-    assert all(d in checked_r9 for d in displaced), displaced
-
-
 def test_stalest_window_policy_mechanics():
     """Unit-test the pure rotation policy: changed ops lead, then
     stalest-first (never-checked = round 0), ties broken by module
@@ -122,8 +93,7 @@ def test_stalest_window_policy_mechanics():
 def test_rotation_takes_over_once_r10_lands(monkeypatch):
     """Simulate the post-r10 world: with a seen-map where every entry is
     checked (r10 closes certification), ``current_window`` must return
-    the stalest-first computation over module order — the hand-pinned
-    era is over."""
+    the stalest-first computation over module order."""
     import parquet_batch_spark.operators as ops
 
     names_mod = _module_order()
@@ -134,7 +104,6 @@ def test_rotation_takes_over_once_r10_lands(monkeypatch):
     got = ops.current_window(list(names_mod))
     assert got == _stalest_window(names_mod, future, [])
     assert len(got) == _WINDOW_SIZE
-    assert got != _R10_WINDOW  # genuinely rotated off the pinned literal
     # the window is entirely the stalest cohort: no entry outside the
     # window is staler than any entry inside it
     cutoff = max(future[n] for n in got)

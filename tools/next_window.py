@@ -1,16 +1,15 @@
 """Display the next driver-check window under the standing rotation
 policy (operators/__init__.py — ``current_window`` is the single
-source of truth; this tool only prints it).  Through r10 that is the
-judge-pre-verified ``_R10_WINDOW``; afterwards the 50 registry entries
+source of truth; this tool only prints it).  The 50 registry entries
 whose most recent driver check is OLDEST win the window — changed ops
-first (``_CHANGED_THIS_ROUND`` entries newer than every committed
-CORRECTNESS artifact — certified ones retire automatically), then
-never-checked,
-then by last-checked round ascending, ties broken by module order.
+first (``_CHANGED_THIS_ROUND`` entries newer than the op's own last
+green driver check — certified ones retire automatically), then
+never-checked, then by last-checked round ascending, ties broken by
+module order.
 
     python tools/next_window.py [window_size]
 
-Prints the window plus a staleness histogram so post-r10 rounds can be
+Prints the window plus a staleness histogram so each round can be
 sanity-checked at a glance.
 """
 
