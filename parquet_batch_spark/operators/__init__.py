@@ -88,9 +88,11 @@ _CHANGED_THIS_ROUND: dict[str, int] = {
     # free 64-column element_at sum aggregates (mean + Weiszfeld).
     # r13 (key re-bumped): REVERTED to the posexplode form — the r12
     # shape was a driver-confirmed 1.87× sf0.1 regression (VERDICT r12
-    # #1); phase-level A/B in tools/ab_gm.py localized it to the
-    # no-grouping 64-sum aggregates.
-    "embedding_geometric_median": 13,
+    # #1); phase-level A/B in commit f2682d4 (tools/ab_gm.py) localized
+    # it to the no-grouping 64-sum aggregates.  r14 (key re-bumped):
+    # the cached quantized rows are unpersisted once the last Weiszfeld
+    # pass is collected (one persistent RDD per call leaked before).
+    "embedding_geometric_median": 14,
     # simhash: fingerprint subtree localCheckpoint'd so the band
     # self-join stops re-computing the vote aggregate twice.
     "dedup_simhash": 12,
@@ -154,7 +156,8 @@ _CHANGED_THIS_ROUND: dict[str, int] = {
     # r13 (key re-bumped from 12): centroid update REVERTED to
     # posexplode + groupBy(k, d) — the same finding as the geometric-
     # median revert (wide multi-sum aggregates lose to Generate +
-    # hash-agg; tools/ab_kmeans_update.py 0.62 vs 0.91 s).
+    # hash-agg; A/B in commit 8f30727 (tools/ab_kmeans_update.py) 0.62
+    # vs 0.91 s).
     "ml_kmeans_lloyd": 13,
     # r13 duplicated-subtree checkpoints (the r12 disease, second
     # sweep): the vocab²-bounded bigram-count reduce feeds 2-4
@@ -186,6 +189,12 @@ _CHANGED_THIS_ROUND: dict[str, int] = {
     "multimodal_dedup_phash": 13,
     "dedup_incremental_novelty": 13,
     "graph_degree_histogram": 13,
+    # r14: the foreachBatch merge detaches its compacted result and
+    # removes its staging dir; the two state-source ops stop their
+    # query on the exception path (the _drain rule).
+    "streaming_foreach_batch_merge": 14,
+    "streaming_state_store_read": 14,
+    "streaming_state_metadata_source": 14,
 }
 
 _WINDOW_SIZE = 50

@@ -1059,11 +1059,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # checkpoint every OTHER round (r13, kcore's measured cadence):
         # per-round eager checkpoints cost one job each; alternating
-        # A/B (tools/ab_pagerank.py, probe 0.232) reads every-round
-        # 3.08 s vs every-2nd 2.37 s — the 2-deep lineage between
-        # checkpoints replans two tiny join+agg rounds, cheaper than
-        # the extra PR_ITERS/2 job launches.  Trajectory unchanged
-        # (checkpoints never alter the integer arithmetic).
+        # A/B in commit 8f30727 (tools/ab_pagerank.py, probe 0.232)
+        # reads every-round 3.08 s vs every-2nd 2.37 s — the 2-deep
+        # lineage between checkpoints replans two tiny join+agg
+        # rounds, cheaper than the extra PR_ITERS/2 job launches.
+        # Trajectory unchanged (checkpoints never alter the integer
+        # arithmetic).
         if i % 2 == 1:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(

@@ -1884,10 +1884,10 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         # of the r12 groupBy(k)+64-element_at-sum shape, the same
         # finding as embedding_geometric_median: the wide multi-sum
         # aggregate evaluates SLOWER than Generate + hash-agg
-        # (tools/ab_kmeans_update.py over a fixed assignment table:
-        # 0.62 s vs 0.91 s per update job, probe 0.333), and the
-        # (k, d) partial agg already reduces the exchange to
-        # K·DIM rows per task at any corpus size.
+        # (A/B in commit 8f30727, tools/ab_kmeans_update.py, over a
+        # fixed assignment table: 0.62 s vs 0.91 s per update job,
+        # probe 0.333), and the (k, d) partial agg already reduces
+        # the exchange to K·DIM rows per task at any corpus size.
         sums = (
             assigned.select(
                 "k", F.posexplode("xq").alias("d", "x")
@@ -2426,61 +2426,65 @@ def embedding_geometric_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = emb.select(xq.alias("xq"))
     rows.cache()
-    # r13 REVERT to posexplode + groupBy(d) (VERDICT r12 #1): the r12
-    # grouping-free 64-column aggregate was a measured 1.87× sf0.1
-    # regression (driver 2.03 → 3.79 s).  A phase-level A/B on a quiet
-    # box (tools/ab_gm.py) localized it: the no-grouping aggregate of
-    # 64 element_at sums is SLOWER than Generate+hash-agg in both
-    # halves — mean pass 0.395 vs 0.222 s, Weiszfeld pass 0.768 vs
-    # 0.328 s (64 decimal(38,0) sum expressions in one codegen'd
-    # no-grouping aggregate evaluate worse than the 64-group hash
-    # aggregate the explode feeds, whose map-side partial agg reduces
-    # the exchange to 64 rows/task at any corpus size).
-    sums = (
-        rows.select(F.posexplode("xq").alias("d", "xv"))
-        .groupBy("d")
-        .agg(F.sum("xv").alias("s"), F.count(F.lit(1)).alias("n"))
-        .orderBy("d")
-        .collect()
-    )
-    mean = [_trunc_div(int(r["s"]), int(r["n"])) for r in sums]
-    c = list(mean)
-    for _ in range(GM_ITERS):
-        carr = F.lit([int(v) for v in c])  # Literal array<bigint>
-        dist2 = F.aggregate(
-            F.zip_with("xq", carr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, t: acc + t,
-        )
-        w = F.expr(
-            f"cast({GM_W_SCALE} as bigint)"
-            " div greatest(cast(floor(sqrt(cast(dist2 as double))) as bigint), 1)"
-        )
-        staged = rows.select(dist2.alias("dist2"), "xq").select(
-            w.alias("w"), "xq"
-        )
-        agg = (
-            staged.select("w", F.posexplode("xq").alias("d", "xv"))
+    try:
+        # r13 REVERT to posexplode + groupBy(d) (VERDICT r12 #1): the
+        # r12 grouping-free 64-column aggregate was a measured 1.87×
+        # sf0.1 regression (driver 2.03 → 3.79 s).  A phase-level A/B
+        # on a quiet box (commit f2682d4, tools/ab_gm.py) localized it:
+        # the no-grouping aggregate of 64 element_at sums is SLOWER
+        # than Generate+hash-agg in both halves — mean pass 0.395 vs
+        # 0.222 s, Weiszfeld pass 0.768 vs 0.328 s (64 decimal(38,0)
+        # sum expressions in one codegen'd no-grouping aggregate
+        # evaluate worse than the 64-group hash aggregate the explode
+        # feeds, whose map-side partial agg reduces the exchange to 64
+        # rows/task at any corpus size).
+        sums = (
+            rows.select(F.posexplode("xq").alias("d", "xv"))
             .groupBy("d")
-            .agg(
-                # w reaches GM_W_SCALE (1e12) for points at the center,
-                # so w*xv must not multiply in BIGINT (silent wrap at
-                # |xv| >= ~9.2e6 micro); cast w to decimal FIRST —
-                # decimal(20,0)*bigint = decimal(38,0), exact, matching
-                # the oracle's CAST(w AS HUGEINT) * xq[d].
-                F.sum(
-                    F.col("w").cast("decimal(20,0)") * F.col("xv")
-                ).alias("num"),
-                F.sum(F.col("w").cast("decimal(20,0)")).alias("den"),
-            )
-            .select(
-                "d",
-                F.expr("cast(num div den as long)").alias("cnew"),
-            )
+            .agg(F.sum("xv").alias("s"), F.count(F.lit(1)).alias("n"))
             .orderBy("d")
             .collect()
         )
-        c = [int(r["cnew"]) for r in agg]
+        mean = [_trunc_div(int(r["s"]), int(r["n"])) for r in sums]
+        c = list(mean)
+        for _ in range(GM_ITERS):
+            carr = F.lit([int(v) for v in c])  # Literal array<bigint>
+            dist2 = F.aggregate(
+                F.zip_with("xq", carr, lambda a, b: (a - b) * (a - b)),
+                F.lit(0).cast("long"),
+                lambda acc, t: acc + t,
+            )
+            w = F.expr(
+                f"cast({GM_W_SCALE} as bigint)"
+                " div greatest(cast(floor(sqrt(cast(dist2 as double))) as bigint), 1)"
+            )
+            staged = rows.select(dist2.alias("dist2"), "xq").select(
+                w.alias("w"), "xq"
+            )
+            agg = (
+                staged.select("w", F.posexplode("xq").alias("d", "xv"))
+                .groupBy("d")
+                .agg(
+                    # w reaches GM_W_SCALE (1e12) for points at the center,
+                    # so w*xv must not multiply in BIGINT (silent wrap at
+                    # |xv| >= ~9.2e6 micro); cast w to decimal FIRST —
+                    # decimal(20,0)*bigint = decimal(38,0), exact, matching
+                    # the oracle's CAST(w AS HUGEINT) * xq[d].
+                    F.sum(
+                        F.col("w").cast("decimal(20,0)") * F.col("xv")
+                    ).alias("num"),
+                    F.sum(F.col("w").cast("decimal(20,0)")).alias("den"),
+                )
+                .select(
+                    "d",
+                    F.expr("cast(num div den as long)").alias("cnew"),
+                )
+                .orderBy("d")
+                .collect()
+            )
+            c = [int(r["cnew"]) for r in agg]
+    finally:
+        rows.unpersist()
     out = spark.createDataFrame(
         [
             (d + 1, int(c[d]), int(mean[d]), abs(int(c[d]) - int(mean[d])))

@@ -69,6 +69,17 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+def _await(q) -> None:
+    """Wait for an availableNow query to finish.  It self-terminates on
+    success; the stop is for the exception path, where it's a
+    no-op-or-cleanup either way (ADVICE r7: never leak a running query
+    past the caller's conf restore or temp-dir cleanup)."""
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+
+
 def _drain(
     stream_df: DataFrame,
     spark: SparkSession,
@@ -103,13 +114,7 @@ def _drain(
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            q.awaitTermination()
-        finally:
-            # availableNow self-terminates on success; the stop is for
-            # the exception path, where it's a no-op-or-cleanup either
-            # way (ADVICE r7: never leak a query past the conf restore)
-            q.stop()
+        _await(q)
     finally:
         if shuffle_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -450,6 +455,7 @@ def streaming_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame
     batch aggregate, which the oracle asserts exactly. No driver-side
     collect: batch callbacks run standard distributed writes."""
     import os
+    import shutil
     import tempfile
 
     ev = _event_stream(spark, sf_dir)
@@ -468,17 +474,20 @@ def streaming_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame
             .parquet(staging)
         )
 
-    q = ev.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return (
-        spark.read.parquet(staging)
-        .groupBy("user_id")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.max("max_value").alias("max_value"),
+    try:
+        _await(ev.writeStream.foreachBatch(sink).trigger(availableNow=True).start())
+        return (
+            spark.read.parquet(staging)
+            .groupBy("user_id")
+            .agg(
+                F.sum("n_events").cast("long").alias("n_events"),
+                F.max("max_value").alias("max_value"),
+            )
+            .orderBy("user_id")
+            .localCheckpoint(eager=True)  # detach from the staging dir
         )
-        .orderBy("user_id")
-    )
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 _STREAMING_FOREACH_BATCH_SQL = """
@@ -750,7 +759,7 @@ def streaming_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        _await(q)
         state = spark.read.format("statestore").load(ck)
         return (
             state.select(
@@ -804,7 +813,7 @@ def streaming_state_metadata_source(spark: SparkSession, sf_dir: str) -> DataFra
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        _await(q)
         md = spark.read.format("state-metadata").load(ck)
         return (
             md.select(

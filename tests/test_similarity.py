@@ -107,3 +107,15 @@ def test_cosine_small_and_join_paths_identical(spark, sf_dir, monkeypatch):
     joined = rows(dedup_embedding_cosine(spark, sf_dir))
     assert small, "gate test is vacuous — no pairs at this SF"
     assert small == joined
+
+
+def test_geometric_median_releases_its_cache(spark, sf_smoke):
+    """The op caches its quantized rows for the mean and Weiszfeld
+    passes; the cache must be released once the last pass is collected,
+    because the registry runs every op in one long-lived session."""
+    from parquet_batch_spark.operators.similarity import embedding_geometric_median
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    assert embedding_geometric_median(spark, sf_smoke).count() > 0
+    assert jsc.getPersistentRDDs().size() == before

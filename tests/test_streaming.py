@@ -266,3 +266,29 @@ def test_state_metadata_source_catalog(spark):
     assert r["operatorName"] == "stateStoreSave"
     assert r["stateStoreName"] == "default"
     assert r["minBatchId"] == 0 and r["maxBatchId"] == 0
+
+
+def test_foreach_batch_merge_removes_its_staging_dir(spark):
+    """The foreachBatch merge stages partials under the temp dir; the
+    compacted result is detached from them and the staging dir removed
+    before the op returns, so reading the result afterwards still
+    yields the batch aggregate."""
+    import glob
+    import tempfile
+
+    from parquet_batch_spark.catalog import load
+    from parquet_batch_spark.streaming.windows import streaming_foreach_batch_merge
+
+    pattern = os.path.join(tempfile.gettempdir(), "pbs_febatch_*")
+    before = set(glob.glob(pattern))
+    df = streaming_foreach_batch_merge(spark, SF_DIR)
+    assert set(glob.glob(pattern)) - before == set()
+    got = {r["user_id"]: (r["n_events"], r["max_value"]) for r in df.collect()}
+    exp = {
+        r["user_id"]: (r["n"], r["mx"])
+        for r in load(spark, SF_DIR, "events")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.max("value").alias("mx"))
+        .collect()
+    }
+    assert got == exp

@@ -5,8 +5,7 @@
 Writes ``<out_dir>/<name>_<suffix>.txt`` per query.  For operators
 whose Python body runs driver-side greedy loops (facility location,
 k-center, geometric median) the returned DataFrame is only the final
-``createDataFrame`` — their per-round job plans are captured where the
-op is changed, via the op-specific hooks below.
+``createDataFrame``, so their per-round job plans are not captured.
 """
 
 from __future__ import annotations
@@ -19,29 +18,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def explain_formatted(df) -> str:
-    qe = df._jdf.queryExecution()
-    return qe.explainString(_mode(df))
-
-
-def _mode(df):
-    jvm = df.sparkSession._jvm
-    return jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-
-
 def main() -> None:
     out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     os.makedirs(out_dir, exist_ok=True)
     from parquet_batch_spark.operators import all_queries
+    from parquet_batch_spark.plans.inspect import explain_formatted
     from parquet_batch_spark.session import get_spark
 
     spark = get_spark("capture_plan")
     qs = all_queries()
     for name in names:
-        df = qs[name](spark, SF_DIR)
-        jdf = df._jdf
-        qe = jdf.queryExecution()
-        txt = qe.explainString(_mode(df))
+        txt = explain_formatted(qs[name](spark, SF_DIR))
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(txt)
