@@ -2,7 +2,7 @@
 process (startup-bound confs, no cross-variant JVM warmth), variant
 order reversed on every other rep so host drift cancels.
 
-    python tools/ab.py [--reps R] [-n N] [--sf DIR] [--ops a,b,...] VARIANT VARIANT [...]
+    python tools/ab.py [--reps R] [--ops a,b,...] VARIANT VARIANT [...]
 
 A VARIANT is ``label[:checkout[:conf]]``: a checkout directory (empty =
 this repo) whose own ``tools/time_ops.py`` does the timing, and a
@@ -13,9 +13,11 @@ checkouts, e.g. the parent commit unpacked with ``git archive``:
     python tools/ab.py base \\
         'pfirst::spark.sql.adaptive.coalescePartitions.parallelismFirst=false'
 
-Per-op numbers are best across reps (each rep is itself best-of-N
-adjacent, the bench pass-2 convention); ratios are against the first
-variant.  ``--ops`` defaults to the 24-op sample below.
+Per-op numbers are best across reps (each rep is itself time_ops'
+best-of-2 adjacent, the bench pass-2 convention); ratios are against
+the first variant.  ``--ops`` defaults to the 24-op sample below.  The
+sf dir is time_ops' default; for another, set it in the environment:
+``SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python tools/ab.py ...``.
 """
 
 from __future__ import annotations
@@ -92,16 +94,13 @@ def parse_times(stdout: str) -> dict[str, float]:
     return out
 
 
-def run_once(v: Variant, ops: list[str], sf: str | None, n: int) -> dict[str, float]:
-    env = dict(os.environ, SPARK_GRAFT_CONF=v.conf)
-    if sf:
-        env["SPARK_GRAFT_SF_DIR"] = sf
+def run_once(v: Variant, ops: list[str]) -> dict[str, float]:
     p = subprocess.run(
-        [sys.executable, os.path.join(v.checkout, "tools", "time_ops.py"), f"-n{n}", *ops],
+        [sys.executable, os.path.join(v.checkout, "tools", "time_ops.py"), *ops],
         cwd=v.checkout,
         capture_output=True,
         text=True,
-        env=env,
+        env=dict(os.environ, SPARK_GRAFT_CONF=v.conf),
         timeout=1800,
     )
     doc = parse_times(p.stdout)
@@ -113,8 +112,6 @@ def run_once(v: Variant, ops: list[str], sf: str | None, n: int) -> dict[str, fl
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--reps", type=int, default=2)
-    ap.add_argument("-n", type=int, default=2, help="adjacent runs per op per rep")
-    ap.add_argument("--sf", help="sf dir (default: time_ops's own default)")
     ap.add_argument("--ops", default=",".join(OPS), help="comma-separated op names")
     ap.add_argument("variants", nargs="+", type=parse_variant)
     args = ap.parse_args()
@@ -127,7 +124,7 @@ def main() -> None:
     results: dict[str, list[dict[str, float]]] = {v.label: [] for v in args.variants}
     for rep, v in schedule(args.variants, args.reps):
         try:
-            doc = run_once(v, ops, args.sf, args.n)
+            doc = run_once(v, ops)
         except (RuntimeError, subprocess.TimeoutExpired) as exc:
             print(f"rep{rep} {v.label}: FAILED {exc}", flush=True)
             continue

@@ -38,25 +38,31 @@ def calibrate(spark) -> float:
     return cal
 
 
-def time_ops(spark, sf_dirs, names, n: int = 2) -> list[tuple[str, str, float]]:
-    """Time each op best-of-``n`` per sf dir, after scanning that dir's
-    big tables once; returns ``(sf_dir, name, best_s)`` per (sf, op)."""
+def warm(spark, sf: str) -> None:
+    """Scan ``sf``'s big tables once and start the Python workers, as
+    bench.py does before it times anything."""
     from pyspark.sql import functions as F
 
     from parquet_batch_spark.catalog import load
-    from parquet_batch_spark.operators import all_queries
 
-    qs = all_queries()
-    # Python workers start on first use; pay that before any timing
+    for t in WARM_TABLES:
+        _sink(load(spark, sf, t).select(F.count(F.lit(1))))
     _sink(
         spark.range(spark.sparkContext.defaultParallelism).mapInArrow(
             lambda it: it, "id long"
         )
     )
+
+
+def time_ops(spark, sf_dirs, names, n: int = 2) -> list[tuple[str, str, float]]:
+    """Time each op best-of-``n`` per sf dir, after warming that dir;
+    returns ``(sf_dir, name, best_s)`` per (sf, op)."""
+    from parquet_batch_spark.operators import all_queries
+
+    qs = all_queries()
     out = []
     for sf in sf_dirs:
-        for t in WARM_TABLES:
-            _sink(load(spark, sf, t).select(F.count(F.lit(1))))
+        warm(spark, sf)
         for name in names:
             runs = []
             for _ in range(n):
@@ -80,8 +86,12 @@ def main() -> None:
     from parquet_batch_spark.session import get_spark
 
     spark = get_spark("time_ops")
+    sf_dirs = args.sf.split(",")
+    # calibrate on a warm JVM, as bench.py and older time_ops do, so
+    # ab.py's cal column compares across checkouts
+    warm(spark, sf_dirs[0])
     print(f"cpu_calibration {calibrate(spark):.3f}", flush=True)
-    time_ops(spark, args.sf.split(","), args.names, args.n)
+    time_ops(spark, sf_dirs, args.names, args.n)
 
 
 if __name__ == "__main__":
