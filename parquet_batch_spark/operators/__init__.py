@@ -195,6 +195,9 @@ _CHANGED_THIS_ROUND: dict[str, int] = {
     "streaming_foreach_batch_merge": 14,
     "streaming_state_store_read": 14,
     "streaming_state_metadata_source": 14,
+    # r14: BM25's stats and scoring branches read one doc_id exchange
+    # of the per-doc rows, so documents is scanned and split once.
+    "text_bm25_topk": 14,
 }
 
 _WINDOW_SIZE = 50

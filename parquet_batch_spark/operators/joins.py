@@ -21,11 +21,14 @@ north-star extension surface built on its scan layer.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_batch_spark.catalog import load
 from parquet_batch_spark.functions.numeric import dec9, dsum, dsum_expr, sql_dsum, sql_dsum_expr
+from parquet_batch_spark.operators.sources_ext import _io_dir
 
 
 def join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,17 +310,9 @@ def join_bucketed_colocate(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins; the write cost here is the demo's setup, amortized across
     every downstream join in production. The merge hint pins the SMJ
     path the planner would pick unhinted at real scale."""
-    import os
-    import tempfile
-
     # PID-namespaced path and table names: concurrent runs must not
     # clobber each other's staged buckets or catalog entries (ADVICE r1)
-    wh = os.path.join(
-        tempfile.gettempdir(),
-        f"parquet_batch_spark_io_{os.getpid()}",
-        os.path.basename(sf_dir.rstrip("/")),
-        "bucketed",
-    )
+    wh = _io_dir(sf_dir, "bucketed")
     for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         tbl = f"pbs_bkt_{name}_{os.getpid()}"
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")

@@ -30,7 +30,9 @@ Sink tuning mirrors the reference's writer surface: its
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,11 +43,13 @@ from parquet_batch_spark.catalog import load
 from parquet_batch_spark.functions.numeric import dec, dsum, sql_dsum
 
 # PID-namespaced so concurrent bench/test runs on one machine never
-# clobber each other's staged files (ADVICE r1)
+# clobber each other's staged files (ADVICE r1); removed at exit
 _IO_ROOT = os.path.join(tempfile.gettempdir(), f"parquet_batch_spark_io_{os.getpid()}")
+atexit.register(shutil.rmtree, _IO_ROOT, ignore_errors=True)
 
 
 def _io_dir(sf_dir: str, name: str) -> str:
+    """Per-process staging directory for the tables ops write and read back."""
     return os.path.join(_IO_ROOT, os.path.basename(sf_dir.rstrip("/")), name)
 
 

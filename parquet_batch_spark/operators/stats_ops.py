@@ -5679,6 +5679,10 @@ def agg_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     label×prediction domain bounds the table), then scalar algebra."""
     d = fan_out(load(spark, sf_dir, "documents"), spark)
     pred = marker_langid(tokens_col("text")).pred
+    # The checkpoint is load-bearing, not just a lineage cut: without
+    # it InferFiltersFromConstraints turns the agree branch's ``y = p``
+    # into ``lang = <classifier>`` and pushes it below fan_out's
+    # exchange, so the plan splits each document 5 times over 3 scans
     conf = (
         d.select(F.col("lang").alias("y"), pred.alias("p"))
         .groupBy("y", "p")

@@ -1457,7 +1457,9 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one projection of each document's tokens yields its
     length ``dl`` and the query-term ``tf``s; N, Σdl and the
     ``df``s are one partial-agg pass over that same per-doc table,
-    broadcast back as one row.  No corpus shuffle, no term cross join.
+    broadcast back as one row.  Both read one exchange of the per-doc
+    rows (a few longs per document), so the corpus is scanned and
+    tokenized once.  No text shuffle, no term cross join.
     A doc's score is the sum of its hit terms' scores, and
     ``n_terms_hit`` = Σ[tfⱼ > 0].  Top-K is orderBy+limit = Spark's
     TakeOrderedAndProject (map-side heap per partition, only K rows
@@ -1472,11 +1474,19 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.size(F.filter("tk", lambda x: x == F.lit(q))).cast("long")
 
     # tk is read once per term and once for dl, so it stays a column:
-    # each document is split once
-    per_doc = d.select("doc_id", tokens_col("text").alias("tk")).select(
-        "doc_id",
-        F.size("tk").cast("long").alias("dl"),
-        *[term_freq(q).alias(tf) for q, tf in zip(BM25_QUERY, tfs)],
+    # each document is split once.  The doc_id exchange is the one
+    # subtree both branches read (the second is a ReusedExchange):
+    # without it the stats branch would scan only ``text`` and the
+    # scoring branch ``doc_id, text``, so each document would be read
+    # and split twice
+    per_doc = (
+        d.select("doc_id", tokens_col("text").alias("tk"))
+        .select(
+            "doc_id",
+            F.size("tk").cast("long").alias("dl"),
+            *[term_freq(q).alias(tf) for q, tf in zip(BM25_QUERY, tfs)],
+        )
+        .repartition("doc_id")
     )
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"),

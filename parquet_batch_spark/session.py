@@ -11,6 +11,20 @@ but every config here is chosen to also be the right default on a
 - Arrow-accelerated Python interchange for the Pandas-UDF slow path.
 - ``spark.sql.shuffle.partitions`` sized to cores locally; on a real
   cluster AQE coalescing makes the static number mostly irrelevant.
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark's
+  default wraps every ``F.col`` call and ``Column`` operator in a
+  call-site capture (an active-session lookup, a conf read, a JVM
+  origin set and clear, a Python stack walk that imports IPython and
+  retries ``import ipykernel``).  That is most of the Python→JVM round
+  trips of building a DataFrame (``F.col``: 13 → 3 round trips,
+  ``col % 7``: 11 → 1) and loads IPython into the driver when it is
+  installed.  The cost: a Python-side error from DataFrame code no
+  longer names the Python line that built the failing expression (the
+  JVM query context stays).  It is a static conf, so it only reaches
+  a session this factory starts; a session built elsewhere (the one a
+  caller hands to ``__spark_entry__.entry``) keeps PySpark's default.
+  Turn it back on with
+  ``SPARK_GRAFT_CONF="spark.python.sql.dataFrameDebugging.enabled=true"``.
 
 Local-mode assumption (ADVICE r12): operators use
 ``DataFrame.localCheckpoint`` to truncate iterative/shared-subtree
@@ -56,6 +70,8 @@ def get_spark(app_name: str = "parquet_batch_spark", cpus: str | None = None) ->
         # type for; read as raw nanos and convert in the catalog loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # static: call-site capture per Column call (see module doc)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     # Deployment-tuning hook: ``SPARK_GRAFT_CONF="k=v;k=v"`` applies

@@ -830,6 +830,18 @@ def test_bm25_tokenizes_once_per_scan_after_fan_out(spark, sf_smoke):
         assert any("Exchange" in ln for ln in _subtree(lines, i)[1:]), lines[i]
 
 
+def test_bm25_scans_documents_once(spark, sf_smoke):
+    """BM25's stats and scoring branches read one exchange of the
+    per-doc rows, so a run scans ``documents`` once: the final plan
+    holds one FileScan and the other branch is a ReusedExchange."""
+    from parquet_batch_spark.operators.text_analysis import text_bm25_topk
+
+    df = text_bm25_topk(spark, sf_smoke)
+    df.collect()
+    final = executed_plan(df).split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1 and "ReusedExchange" in final, final
+
+
 _MARKER_LANGID_OPS = (
     "text_langid",
     "quality_langid_confusion",
