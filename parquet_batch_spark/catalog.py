@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import functools
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,17 +78,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 MATERIALIZE_SHARED_STAGES = True
 
 SHARED_STAGES: dict[str, Callable] = {}  # stage name -> stage
-# (applicationId, sf_dir, stage name, extra args) -> (fingerprint, result)
+# (applicationId, sf_dir or paths, stage name, extra args)
+#   -> (fingerprint, result)
 _STAGE_CACHE: dict[tuple, tuple[tuple, object]] = {}
 
 
-def _fingerprint(sf_dir: str, tables: tuple[str, ...]) -> tuple:
-    """(path, size, st_mtime_ns) of every file under each table's path.
-    A path that cannot be listed locally (a remote URI) contributes
-    nothing, so its stages stay keyed by path alone."""
+def _fingerprint(paths: Iterable[str]) -> tuple:
+    """(path, size, st_mtime_ns) of every file under each path.  A
+    path that cannot be listed locally (a remote URI) contributes
+    nothing, so its entries stay keyed by path alone."""
     fp = []
-    for t in tables:
-        root = table_path(sf_dir, t)
+    for root in paths:
         if os.path.isfile(root):
             files = [root]
         else:
@@ -97,6 +97,30 @@ def _fingerprint(sf_dir: str, tables: tuple[str, ...]) -> tuple:
             st = os.stat(path)
             fp.append((path, st.st_size, st.st_mtime_ns))
     return tuple(fp)
+
+
+def _memo(key: tuple, fp: tuple, compute: Callable[[], object]) -> object:
+    """``compute()``, cached under ``key`` next to ``fp``, the
+    fingerprint of its input files: a changed fingerprint recomputes
+    and replaces the entry.
+
+    DataFrame results are ``localCheckpoint()``-ed eagerly; with
+    ``MATERIALIZE_SHARED_STAGES`` off they are returned as the raw,
+    uncached plan.  Plain-data results are cached either way."""
+    hit = _STAGE_CACHE.get(key)
+    if (
+        hit is not None
+        and hit[0] == fp
+        and (MATERIALIZE_SHARED_STAGES or not isinstance(hit[1], DataFrame))
+    ):
+        return hit[1]
+    out = compute()
+    if isinstance(out, DataFrame):
+        if not MATERIALIZE_SHARED_STAGES:
+            return out
+        out = out.localCheckpoint()
+    _STAGE_CACHE[key] = (fp, out)
+    return out
 
 
 def shared_stage(*tables: str):
@@ -118,11 +142,8 @@ def shared_stage(*tables: str):
     replaced.  Keyword ``inputs`` hand the stage a lazy DataFrame its
     caller already built over the same tables, so a miss pays no
     second schema-inference job; they are not part of the key, and a
-    stage called without them builds its own.
-
-    DataFrame results are ``localCheckpoint()``-ed eagerly; with
-    ``MATERIALIZE_SHARED_STAGES`` off they are returned as the raw,
-    uncached plan.  Plain-data results are cached either way.
+    stage called without them builds its own.  Results are stored as
+    ``_memo`` stores them (DataFrames checkpointed).
     """
 
     def register(fn: Callable) -> Callable:
@@ -131,21 +152,9 @@ def shared_stage(*tables: str):
         @functools.wraps(fn)
         def stage(spark: SparkSession, sf_dir: str, *args, **inputs):
             key = (spark.sparkContext.applicationId, sf_dir, name, args)
-            fp = _fingerprint(sf_dir, tables + tuple(a for a in args if a in TABLES))
-            hit = _STAGE_CACHE.get(key)
-            if (
-                hit is not None
-                and hit[0] == fp
-                and (MATERIALIZE_SHARED_STAGES or not isinstance(hit[1], DataFrame))
-            ):
-                return hit[1]
-            out = fn(spark, sf_dir, *args, **inputs)
-            if isinstance(out, DataFrame):
-                if not MATERIALIZE_SHARED_STAGES:
-                    return out
-                out = out.localCheckpoint()
-            _STAGE_CACHE[key] = (fp, out)
-            return out
+            named = tables + tuple(a for a in args if a in TABLES)
+            fp = _fingerprint(table_path(sf_dir, t) for t in named)
+            return _memo(key, fp, lambda: fn(spark, sf_dir, *args, **inputs))
 
         SHARED_STAGES[name] = stage
         return stage
@@ -168,6 +177,7 @@ SCHEMA_CONFS = (
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
 )
 
 
@@ -179,6 +189,31 @@ def table_schema(spark: SparkSession, sf_dir: str, name: str, *confs: str) -> St
     inferring again, and a rewritten table re-infers through the
     fingerprint."""
     return spark.read.parquet(table_path(sf_dir, name)).schema
+
+
+def read_parquet(spark: SparkSession, paths: list[str], options: dict) -> DataFrame:
+    """``spark.read.options(**options).parquet(*paths)``, inferring the
+    schema once per dataset version.
+
+    Inference reads the Parquet footers in a Spark job.  The inferred
+    schema is memoized like a shared stage: keyed by (applicationId,
+    ``paths``, ``options``, ``SCHEMA_CONFS`` values) and stored with
+    the fingerprint of every file under ``paths``, so a rewritten or
+    added file re-infers.  When a path cannot be listed locally (a
+    remote URI or a glob) no fingerprint could see its files change,
+    and every call infers."""
+    reader = spark.read.options(**options)
+    if not all(os.path.exists(p) for p in paths):
+        return reader.parquet(*paths)
+    confs = tuple(spark.conf.get(k) for k in SCHEMA_CONFS)
+    key = (
+        spark.sparkContext.applicationId,
+        tuple(paths),
+        "dataset_schema",
+        (tuple(sorted(options.items())), confs),
+    )
+    schema = _memo(key, _fingerprint(paths), lambda: reader.parquet(*paths).schema)
+    return reader.schema(schema).parquet(*paths)
 
 
 @shared_stage()

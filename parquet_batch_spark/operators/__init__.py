@@ -198,6 +198,9 @@ _CHANGED_THIS_ROUND: dict[str, int] = {
     # r14: BM25's stats and scoring branches read one doc_id exchange
     # of the per-doc rows, so documents is scanned and split once.
     "text_bm25_topk": 14,
+    # r14: the corpus norm moments are one 1-row aggregate broadcast
+    # back to the rows, not a partitionless window over every row.
+    "embedding_norm_outliers": 14,
 }
 
 _WINDOW_SIZE = 50

@@ -3152,18 +3152,15 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         n2.alias("n2"),
         F.floor(n2 / F.lit(1000000.0)).cast("long").alias("nk"),
     )
-    tot = Window.partitionBy()
-    stats = rows.select(
-        "vec_id",
-        "n2",
-        "nk",
-        F.count(F.lit(1)).over(tot).alias("n"),
-        F.sum("nk").over(tot).alias("s1"),
+    moments = rows.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("nk").alias("s1"),
         # nk ≈ 1e6 for unit-norm vectors, so Σ nk² in plain int64
         # overflows near ~9M rows — decimal keeps the corpus-wide
         # second moment exact at any N (same hardening as acf/decompose)
-        F.sum(F.col("nk").cast("decimal(18,0)") * F.col("nk")).over(tot).alias("s2"),
+        F.sum(F.col("nk").cast("decimal(18,0)") * F.col("nk")).alias("s2"),
     )
+    stats = rows.crossJoin(F.broadcast(moments))
     n, s1, s2 = (F.col(c).cast("double") for c in ("n", "s1", "s2"))
     mean = s1 / n
     var = s2 / n - mean * mean

@@ -24,23 +24,39 @@ Memory model parity: the reference streams one Arrow RecordBatch
 (+readahead) at a time and pivots it into Python dicts with
 ``.as_py()`` (reader.py:59-72, 93-96). Here the scan's Arrow record
 batches (``Dataset.toArrowBatchRdd``) are served to the driver one
-*partition* at a time over the same socket protocol
-``toLocalIterator`` uses — executors scan in parallel (the scan
-itself is distributed, unlike the reference), but the driver JVM
-holds one partition's Arrow frames at a time (plus the next one with
-prefetch), and Python decodes and pivots one batch of at most
-``batch_size`` rows (``spark.sql.execution.arrow.
-maxRecordsPerBatch``, 10k by default) at a time. The pivot is
-column-wise: each column becomes a Python list in one call, nested
-structs, arrays and maps recurse through their child columns and
-list offsets, and the columns are zipped into per-row dicts equal
-to what ``Row.asDict(recursive=True)`` returns; the per-row dicts
-themselves are built lazily as the caller iterates. Streaming 30k
-rows in 10k-row batches at full width (string/int/float columns, a
-struct with a list member, a list column) grows driver RSS by ~2 MB,
-against ~0.2 MB for per-row unpickling of Spark Rows.
-``prefetch_partitions`` maps to the reference's ``batch_readahead``
-concept.
+*split* at a time over the same socket protocol ``toLocalIterator``
+uses: one Spark job per split, run one after another. The driver JVM
+holds one split's Arrow frames at a time, plus the next split's with
+prefetch, and a split holds at most
+``spark.sql.files.maxPartitionBytes`` (128 MB by default) of Parquet
+input. Python decodes and pivots one batch of at most ``batch_size``
+rows (``spark.sql.execution.arrow.maxRecordsPerBatch``, 10k by
+default) at a time.
+
+The stream ignores core parallelism. Spark normally cuts a scan into
+at least ``defaultParallelism`` splits (``maxSplitBytes = max(openCost,
+totalBytes / minPartitionNum)``) so every core gets a task, but the
+single driver consumes the splits serially, so more splits only add
+jobs: on 8,000 cores a 20 GB dataset of 100 MB files would become
+5,000 sequential 4 MB jobs. The stream therefore plans its scan with
+``spark.sql.files.minPartitionNum=1``, set only while the scan's RDD
+is built (a shuffle under the streamed plan runs then too, and plans
+its own map-side scan the same way); splits then grow up to
+``maxPartitionBytes``, the bound a single large file already hits,
+and the same dataset streams in 200 jobs. ``from_path`` reads with a
+schema inferred once per dataset version (``catalog.read_parquet``),
+so a stream of an unchanged path fires no inference job.
+
+The pivot is column-wise: each column becomes a Python list in one
+call, nested structs, arrays and maps recurse through their child
+columns and list offsets, and the columns are zipped into per-row
+dicts equal to what ``Row.asDict(recursive=True)`` returns; the
+per-row dicts themselves are built lazily as the caller iterates.
+Streaming 30k rows in 10k-row batches at full width
+(string/int/float columns, a struct with a list member, a list
+column) grows driver RSS by ~2 MB, against ~0.2 MB for per-row
+unpickling of Spark Rows. ``prefetch_partitions`` maps to the
+reference's ``batch_readahead`` concept.
 """
 
 from __future__ import annotations
@@ -48,6 +64,7 @@ from __future__ import annotations
 import os
 import warnings
 from collections.abc import Generator, Iterable, Iterator
+from contextlib import contextmanager
 from itertools import pairwise, repeat
 from typing import Any
 
@@ -69,6 +86,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from parquet_batch_spark.catalog import read_parquet
+
 # ``batch_size`` bounds both the executors' vectorized parquet batch
 # and the Arrow batch the driver pivots at once.
 _BATCH_SIZE_CONFS = (
@@ -76,6 +95,8 @@ _BATCH_SIZE_CONFS = (
     "spark.sql.execution.arrow.maxRecordsPerBatch",
 )
 _BINARY_AS_BYTES_CONF = "spark.sql.execution.pyspark.binaryAsBytes"
+# One scan split per stream job, grown up to maxPartitionBytes.
+_MIN_PARTITION_NUM_CONF = "spark.sql.files.minPartitionNum"
 # Spark types whose null-free Arrow column converts in one numpy call.
 _NUMPY_TYPES = (
     BooleanType, ByteType, ShortType, IntegerType, LongType, FloatType,
@@ -142,22 +163,11 @@ class ParquetReader:
             )
         if prefetch_partitions is None:
             prefetch_partitions = bool(batch_readahead)
-        conf = df.sparkSession.conf
-        prior = (
-            {k: conf.get(k, None) for k in _BATCH_SIZE_CONFS}
-            if batch_size is not None
-            else {}
+        batch = (
+            {} if batch_size is None else dict.fromkeys(_BATCH_SIZE_CONFS, str(batch_size))
         )
-        for key in prior:
-            conf.set(key, str(batch_size))
-        try:
+        with _scoped_conf(df.sparkSession, batch):
             yield from _arrow_rows(df, prefetch_partitions)
-        finally:
-            for key, value in prior.items():
-                if value is None:
-                    conf.unset(key)
-                else:
-                    conf.set(key, value)
 
     def get_rows(self, columns: list[str]) -> Generator[dict, None, None]:
         """Primary path (reference reader.py:90-97): projected scan,
@@ -184,10 +194,7 @@ def from_path(
     if isinstance(parquet_path, (str, os.PathLike)):
         parquet_path = [parquet_path]
     paths = [os.fspath(p) for p in parquet_path]
-    reader = spark.read
-    if options:
-        reader = reader.options(**options)
-    return ParquetReader(reader.parquet(*paths))
+    return ParquetReader(read_parquet(spark, paths, options))
 
 
 def from_dataset(df: DataFrame) -> ParquetReader:
@@ -200,9 +207,9 @@ def from_dataset(df: DataFrame) -> ParquetReader:
 
 
 def _arrow_rows(df: DataFrame, prefetch_partitions: bool) -> Iterator[dict]:
-    """Serve ``df``'s Arrow record batches to the driver one partition
-    at a time (``toLocalIterator``'s socket protocol) and pivot each
-    batch into per-row dicts."""
+    """Serve ``df``'s Arrow record batches to the driver one split at
+    a time (``toLocalIterator``'s socket protocol, one job per split)
+    and pivot each batch into per-row dicts."""
     import pyarrow as pa
     from pyspark.serializers import NoOpSerializer
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -217,12 +224,33 @@ def _arrow_rows(df: DataFrame, prefetch_partitions: bool) -> Iterator[dict]:
     as_bytes = spark.conf.get(_BINARY_AS_BYTES_CONF).lower() == "true"
     sc = spark.sparkContext
     with SCCallSiteSync(sc):
+        # the scan's splits are planned while its RDD is built
+        with _scoped_conf(spark, {_MIN_PARTITION_NUM_CONF: "1"}):
+            batches = df._jdf.toArrowBatchRdd()
         sock_info = sc._jvm.PythonRDD.toLocalIteratorAndServe(
-            df._jdf.toArrowBatchRdd(), prefetch_partitions
+            batches, prefetch_partitions
         )
     for frame in _local_iterator_from_socket(sock_info, NoOpSerializer()):
         batch = pa.ipc.read_record_batch(pa.py_buffer(frame), arrow_schema)
         yield from _dicts(schema, batch.columns, batch.num_rows, as_bytes)
+
+
+@contextmanager
+def _scoped_conf(spark: SparkSession, values: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the body's duration, then restore each
+    prior value (or unset it)."""
+    conf = spark.conf
+    prior = {k: conf.get(k, None) for k in values}
+    for key, value in values.items():
+        conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                conf.unset(key)
+            else:
+                conf.set(key, value)
 
 
 def _dicts(

@@ -425,7 +425,7 @@ def test_global_windows_only_over_reduced_tables(spark, sf_smoke):
 
     whitelist = {
         # stats/ML ops: windows over bins / ranks / reduced group tables
-        "embedding_norm_outliers", "text_zipf_fit", "quality_psi_drift",
+        "text_zipf_fit", "quality_psi_drift",
         "quality_ks_drift", "agg_survival_km", "window_acf_lags",
         "window_peak_concurrency", "agg_rfm_segmentation",
         "window_order_gap_distribution", "text_ngram_coverage_curve",

@@ -11,6 +11,8 @@ row-by-row golden checks, not just first/last/count.
 
 from __future__ import annotations
 
+import itertools
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -43,6 +45,23 @@ def _mixed_rows(n: int):
             }
         )
     return rows
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it fired, read from its
+    job group once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    group = f"reader-{next(_GROUPS)}"
+    sc.setJobGroup(group, "reader")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _write_fixture(tmpdir: str, total: int, rows_per_file: int) -> str:
@@ -149,19 +168,93 @@ def test_batch_size_bounds_driver_batches(spark, tmp_path, monkeypatch):
 
 
 def test_early_abandon_restores_conf_and_releases_stream(spark, tmp_path):
-    """Closing a half-read stream restores both batch confs and frees
-    the JVM serving thread: the next full stream on the same session
-    returns every row."""
-    priors = {k: spark.conf.get(k, None) for k in _BATCH_CONF_KEYS}
+    """Closing a half-read stream restores both batch confs and the
+    session's split planning (minPartitionNum) and frees the JVM
+    serving thread: the next full stream on the same session returns
+    every row."""
+    min_parts = "spark.sql.files.minPartitionNum"
+    spark.conf.set(min_parts, "2")
+    try:
+        priors = {k: spark.conf.get(k, None) for k in (*_BATCH_CONF_KEYS, min_parts)}
+        path = _write_fixture(str(tmp_path / "ds"), 30, 10)
+        reader = from_path(spark, path)
+        gen = reader.get_rows_with_args(batch_size=3, prefetch_partitions=True)
+        for _row in gen:
+            break
+        gen.close()
+        assert {k: spark.conf.get(k, None) for k in priors} == priors
+        rows = sorted(reader.get_rows_with_args(), key=lambda r: r["f_int"])
+        assert rows == _mixed_rows(30)
+        assert spark.conf.get(min_parts) == "2"
+    finally:
+        spark.conf.unset(min_parts)
+
+
+def test_stream_runs_one_job_per_max_partition_bytes_split(spark, tmp_path):
+    """A single driver consumes the stream serially, so the scan is
+    planned for one consumer: three small files pack into one split
+    and stream in exactly one Spark job (with one split per core,
+    local[4] would run three)."""
     path = _write_fixture(str(tmp_path / "ds"), 30, 10)
     reader = from_path(spark, path)
-    gen = reader.get_rows_with_args(batch_size=3, prefetch_partitions=True)
-    for _row in gen:
-        break
-    gen.close()
-    assert {k: spark.conf.get(k, None) for k in _BATCH_CONF_KEYS} == priors
-    rows = sorted(reader.get_rows_with_args(), key=lambda r: r["f_int"])
-    assert rows == _mixed_rows(30)
+    for prefetch in (True, False):
+        rows, jobs = _jobs(
+            spark,
+            lambda p=prefetch: list(reader.get_rows_with_args(prefetch_partitions=p)),
+        )
+        assert len(rows) == 30
+        assert jobs == 1
+
+
+def test_from_path_infers_schema_once_per_dataset_version(spark, tmp_path):
+    """A second ``from_path`` of unchanged files fires no inference
+    job; rewriting one file, passing different reader options or
+    changing a schema conf infers again, and a glob infers every
+    time."""
+    path = _write_fixture(str(tmp_path / "ds"), 30, 10)
+
+    def read(**options):
+        return _jobs(spark, lambda: from_path(spark, path, mergeSchema="true", **options))
+
+    _, jobs = read()
+    assert jobs
+    reader, jobs = read()
+    assert not jobs
+    assert "f_new" not in reader.df.columns
+    assert len(list(reader.get_rows(["f_int"]))) == 30
+
+    # one file rewritten in place, with an added column
+    table = pq.read_table(f"{path}/part-001.parquet")
+    table = table.append_column("f_new", pa.array(range(10), pa.int64()))
+    pq.write_table(table, f"{path}/part-001.parquet")
+    reader, jobs = read()
+    assert jobs
+    got = [r["f_new"] for r in reader.get_rows(["f_new"])]
+    assert sorted(v for v in got if v is not None) == list(range(10))
+    _, jobs = read()
+    assert not jobs
+
+    # the same files under different reader options
+    _, jobs = read(pathGlobFilter="*.parquet")
+    assert jobs
+    _, jobs = read(pathGlobFilter="*.parquet")
+    assert not jobs
+
+    # ... or under a session conf that changes the inferred schema
+    def columns():
+        return from_path(spark, path).df.columns
+
+    assert _jobs(spark, columns)[1] and not _jobs(spark, columns)[1]
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        merged, jobs = _jobs(spark, columns)
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+    assert jobs and "f_new" in merged
+
+    # a glob is not listed locally: no fingerprint, so every call infers
+    glob = f"{path}/part-*.parquet"
+    assert all(_jobs(spark, lambda: from_path(spark, glob))[1] for _ in range(2))
 
 
 def test_use_threads_warns_no_analog(spark, tmp_path):
@@ -446,15 +539,34 @@ def test_map_entries_keep_stored_order(spark, tmp_path):
 
 @pytest.mark.parametrize("prefetch", [True, False], ids=["prefetch", "no-prefetch"])
 def test_type_matrix_prefetch_and_batch_size(spark, matrix_path, local_tz, prefetch):
-    """Multi-partition input, small driver batches, prefetch on/off."""
+    """Multi-partition input, small driver batches, prefetch on/off.
+    ``maxPartitionBytes`` is lowered to the largest file's size, so
+    every file is its own split and the stream runs one job each."""
+    import os
+
     df = spark.read.parquet(matrix_path)
     want = _by_key(_row_path(df))
-    got = _by_key(
-        from_path(spark, matrix_path).get_rows_with_args(
-            batch_size=4, prefetch_partitions=prefetch
-        )
+    largest = max(
+        os.path.getsize(os.path.join(matrix_path, f))
+        for f in os.listdir(matrix_path)
+        if f.endswith(".parquet")
     )
-    assert repr(got) == repr(want)
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, str(largest))
+    try:
+        rows, jobs = _jobs(
+            spark,
+            lambda: list(
+                from_path(spark, matrix_path).get_rows_with_args(
+                    batch_size=4, prefetch_partitions=prefetch
+                )
+            ),
+        )
+    finally:
+        spark.conf.set(key, prior)
+    assert jobs > 1
+    assert repr(_by_key(rows)) == repr(want)
 
 
 def test_type_matrix_projection_and_filter(spark, matrix_path, local_tz):
