@@ -367,17 +367,16 @@ def test_stats_ops_scale_shapes(spark, sf_dir):
     or (except the deliberately nested null-aware NOT IN probe) a
     nested-loop join; single-agg moment reductions must contain
     exactly the aggregation exchanges their docstrings claim."""
-    from parquet_batch_spark.operators.stats_ops import (
-        agg_chi_square_independence,
+    from parquet_batch_spark.operators.stats.agg_descriptive import (
         agg_cohort_ltv_curve,
         agg_regression_per_group,
-        ml_ols_multivar,
-        sample_bootstrap_means,
-        seq_transition_matrix,
-        text_pmi_cooccurrence,
-        window_acf_lags,
-        window_rolling_corr,
     )
+    from parquet_batch_spark.operators.stats.agg_inference import agg_chi_square_independence
+    from parquet_batch_spark.operators.stats.ml import ml_ols_multivar
+    from parquet_batch_spark.operators.stats.sample import sample_bootstrap_means
+    from parquet_batch_spark.operators.stats.seq import seq_transition_matrix
+    from parquet_batch_spark.operators.stats.text import text_pmi_cooccurrence
+    from parquet_batch_spark.operators.stats.window import window_acf_lags, window_rolling_corr
 
     for fn in (
         agg_regression_per_group,
@@ -403,7 +402,7 @@ def test_stats_ops_scale_shapes(spark, sf_dir):
 def test_regression_single_shuffle(spark, sf_dir):
     """The per-group OLS is one partial-agg + one exchange: no window,
     no join, no second scan-side exchange."""
-    from parquet_batch_spark.operators.stats_ops import agg_regression_per_group
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_regression_per_group
 
     plan = executed_plan(agg_regression_per_group(spark, sf_dir))
     assert plan.count("Exchange") <= 2, plan[:3000]  # agg + final orderBy
@@ -577,10 +576,8 @@ def test_r6_ops_have_scale_safe_plans(spark, sf_dir):
         sample_rho_loss_selection,
         seq_curriculum_order,
     )
-    from parquet_batch_spark.operators.stats_ops import (
-        agg_empirical_bayes_shrinkage,
-        window_page_hinkley_drift,
-    )
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_empirical_bayes_shrinkage
+    from parquet_batch_spark.operators.stats.window import window_page_hinkley_drift
     from parquet_batch_spark.operators.text_analysis import (
         quality_wimbd_top_ngrams,
     )
@@ -673,13 +670,13 @@ _DRIVER_MATERIALIZATION_WHITELIST = {
     ("operators/sources_ext.py", "source_jsonl_corrupt_tolerant", "collect"):
         (1, "writes the staged fixture: bounded LIMIT sample of part "
             "rows serialized to the local JSONL fixture"),
-    ("operators/stats_ops.py", "agg_cohen_kappa", "collect"):
+    ("operators/stats/agg_inference.py", "agg_cohen_kappa", "collect"):
         (1, "label-pair confusion table, <=|labels|^2 rows (labels is "
             "a literal domain)"),
-    ("operators/stats_ops.py", "embedding_pca_power_iteration", "collect"):
+    ("operators/stats/ml.py", "embedding_pca_power_iteration", "collect"):
         (1, "the 64x64 second-moment matrix (4096 scalars, corpus-"
             "independent) — the one-pass reduce-then-fold form"),
-    ("operators/stats_ops.py", "seq_markov_attribution", "collect"):
+    ("operators/stats/seq.py", "seq_markov_attribution", "collect"):
         (1, "event-type transition matrix, <=|event types|^2 (6x6) "
             "rows"),
     ("operators/warehouse.py", "etl_analyze_table_stats", "collect"):

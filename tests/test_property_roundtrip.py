@@ -298,7 +298,7 @@ def test_pareto_scan_matches_bruteforce(spark, pts):
 
 # ---------------------------------------------------------------------------
 # Property: the exact-integer-moment OLS closed form used across
-# stats_ops agrees with numpy's lstsq for ARBITRARY integer samples —
+# the stats ops agrees with numpy's lstsq for ARBITRARY integer samples —
 # not just the fixture tables. Small deadline-free batches: Spark jobs
 # inside hypothesis examples are slow, so examples are few but each
 # checks the whole algebra path.

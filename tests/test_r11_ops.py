@@ -133,7 +133,7 @@ def test_markov_stationary_single_fold_plan(spark, sf_smoke):
     """The rewrite's point: no iteration joins left — the physical plan
     contains zero join nodes (the 12 iterations live inside one
     higher-order-function expression)."""
-    from parquet_batch_spark.operators.stats_ops import seq_markov_stationary
+    from parquet_batch_spark.operators.stats.seq import seq_markov_stationary
 
     plan = (
         seq_markov_stationary(spark, sf_smoke)
@@ -153,12 +153,8 @@ def test_markov_stationary_trajectory_unchanged_vs_unrolled(spark, sf_smoke):
     from pyspark.sql import functions as F
     from pyspark.sql import Window
 
-    from parquet_batch_spark.operators.stats_ops import (
-        MS_ITERS,
-        MS_SCALE,
-        load,
-        seq_markov_stationary,
-    )
+    from parquet_batch_spark.catalog import load
+    from parquet_batch_spark.operators.stats.seq import MS_ITERS, MS_SCALE, seq_markov_stationary
 
     ev = load(spark, sf_smoke, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

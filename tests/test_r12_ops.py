@@ -129,9 +129,7 @@ def test_partial_moments_overflow_guard(spark, tmp_path):
     wrapping the int64 matmul while the oracle's HUGEINT sum does not
     (a component of 2e7 micro-quantizes to |xq| = 2e13, whose square
     alone exceeds 2^63)."""
-    from parquet_batch_spark.operators.stats_ops import (
-        embedding_pca_power_iteration,
-    )
+    from parquet_batch_spark.operators.stats.ml import embedding_pca_power_iteration
 
     v = np.zeros(DIM, dtype=np.float32)
     v[0] = 2.0e7

@@ -73,7 +73,7 @@ def _hurst_reference_r11_shape(spark, sf_dir):
     from pyspark.sql import Window
 
     from parquet_batch_spark.catalog import load
-    from parquet_batch_spark.operators.stats_ops import HURST_LAGS
+    from parquet_batch_spark.operators.stats.window import HURST_LAGS
 
     o = load(spark, sf_dir, "orders")
     daily = (
@@ -150,10 +150,7 @@ def _hurst_reference_r11_shape(spark, sf_dir):
 def test_hurst_exploded_lags_bit_identical_to_per_lag_branches(
     spark, sf_smoke, sf_dir
 ):
-    from parquet_batch_spark.operators.stats_ops import (
-        HURST_LAGS,
-        window_hurst_exponent,
-    )
+    from parquet_batch_spark.operators.stats.window import HURST_LAGS, window_hurst_exponent
 
     for sf in (sf_smoke, sf_dir):
         got = _rows(

@@ -347,10 +347,8 @@ def test_threshold_sweep_is_monotone(spark, sf_dir):
 
 
 def test_ece_bucket_accounting(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
-        ECE_BUCKETS,
-        agg_expected_calibration_error,
-    )
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_expected_calibration_error
+    from parquet_batch_spark.operators.stats.common import ECE_BUCKETS
 
     rows = agg_expected_calibration_error(spark, sf_dir).collect()
     assert sum(r["n"] for r in rows) == 500
@@ -407,7 +405,7 @@ def test_bm25_matches_python(spark, sf_dir):
 
 
 def test_nb_langid_confusion_accounting(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import ml_naive_bayes_langid
+    from parquet_batch_spark.operators.stats.ml import ml_naive_bayes_langid
 
     rows = ml_naive_bayes_langid(spark, sf_dir).collect()
     assert sum(r["n_docs"] for r in rows) == 500
@@ -476,7 +474,7 @@ def test_ratio_ci_matches_python(spark, sf_dir):
     import math
 
     from parquet_batch_spark.catalog import load
-    from parquet_batch_spark.operators.stats_ops import agg_ratio_delta_ci
+    from parquet_batch_spark.operators.stats.agg_inference import agg_ratio_delta_ci
 
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice", "l_quantity"
@@ -583,7 +581,7 @@ def test_shapley_efficiency_axiom(spark, sf_dir):
     """Shapley values must sum to v(grand coalition) − v(∅) — the
     efficiency axiom, exact in the ×k! scaled integers."""
     from parquet_batch_spark.catalog import load
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.agg_descriptive import (
         SHAP_CHANNELS,
         agg_shapley_attribution,
     )
@@ -614,7 +612,7 @@ def test_shapley_efficiency_axiom(spark, sf_dir):
 
 
 def test_sax_words_shape(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import rollup_sax_symbols
+    from parquet_batch_spark.operators.stats.window import rollup_sax_symbols
 
     rows = rollup_sax_symbols(spark, sf_dir).collect()
     assert rows
@@ -696,10 +694,7 @@ def test_ct_langid_confusion_accounting(spark, sf_dir):
 
 
 def test_burstiness_bounds(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
-        BURST_MIN_DF,
-        text_word_burstiness,
-    )
+    from parquet_batch_spark.operators.stats.text import BURST_MIN_DF, text_word_burstiness
 
     rows = text_word_burstiness(spark, sf_dir).collect()
     assert rows
@@ -771,7 +766,7 @@ def test_mann_kendall_matches_python(spark, sf_dir):
     from collections import Counter
 
     from parquet_batch_spark.catalog import load
-    from parquet_batch_spark.operators.stats_ops import agg_mann_kendall_trend
+    from parquet_batch_spark.operators.stats.agg_inference import agg_mann_kendall_trend
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderpriority", F.date_format("o_orderdate", "yyyy-MM").alias("m")
@@ -797,7 +792,7 @@ def test_mann_kendall_matches_python(spark, sf_dir):
 
 
 def test_bradley_terry_strengths_normalized(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import ml_bradley_terry_ranking
+    from parquet_batch_spark.operators.stats.ml import ml_bradley_terry_ranking
 
     rows = ml_bradley_terry_ranking(spark, sf_dir).collect()
     assert len(rows) == 5  # the five order priorities
@@ -832,7 +827,7 @@ def test_patch_budget_exact(spark, sf_dir):
 
 def test_kappa_matches_python(spark, sf_dir):
     from parquet_batch_spark.catalog import load
-    from parquet_batch_spark.operators.stats_ops import agg_cohen_kappa
+    from parquet_batch_spark.operators.stats.agg_inference import agg_cohen_kappa
     from parquet_batch_spark.operators.text_analysis import text_langid
 
     preds = {
@@ -858,7 +853,7 @@ def test_kappa_matches_python(spark, sf_dir):
 
 def test_auc_matches_python(spark, sf_dir):
     from parquet_batch_spark.catalog import load
-    from parquet_batch_spark.operators.stats_ops import ml_auc_roc
+    from parquet_batch_spark.operators.stats.ml import ml_auc_roc
 
     docs = load(spark, sf_dir, "documents").select("n_chars", "text").collect()
     pairs = [
@@ -898,7 +893,7 @@ def test_kmeans_partition_is_total_and_inertia_positive(spark, sf_dir):
 
 
 def test_mcnemar_discordant_accounting(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import agg_mcnemar_test
+    from parquet_batch_spark.operators.stats.agg_inference import agg_mcnemar_test
 
     row = agg_mcnemar_test(spark, sf_dir).collect()[0]
     assert row["n"] == 500
@@ -909,7 +904,7 @@ def test_mcnemar_discordant_accounting(spark, sf_dir):
 
 
 def test_lift_curve_contract(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import ml_lift_curve
+    from parquet_batch_spark.operators.stats.ml import ml_lift_curve
 
     rows = ml_lift_curve(spark, sf_dir).collect()
     assert rows

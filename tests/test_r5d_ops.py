@@ -9,7 +9,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from parquet_batch_spark.operators.stats_ops import (
+from parquet_batch_spark.operators.stats.agg_inference import (
     ANOVA_PRIORITIES,
     CUPED_SPLIT_DATE,
     TUKEY_Q_CRIT,
@@ -145,10 +145,8 @@ def test_cuped_matches_python_reference(spark, sf_dir):
 def test_average_precision_matches_python_reference(spark, sf_dir):
     """Replicate the micro-quantized step-function AP contract in
     pure Python from the raw (score, label) pairs."""
-    from parquet_batch_spark.operators.stats_ops import (
-        ECE_SCALE_CHARS,
-        ml_average_precision,
-    )
+    from parquet_batch_spark.operators.stats.common import ECE_SCALE_CHARS
+    from parquet_batch_spark.operators.stats.ml import ml_average_precision
     from parquet_batch_spark.functions.text import tokens_col
 
     d = load(spark, sf_dir, "documents").select(
@@ -186,7 +184,7 @@ def test_average_precision_matches_python_reference(spark, sf_dir):
 def test_markov_stationary_fixed_point_properties(spark, sf_dir):
     """Replicate the integer power iteration in pure Python from the
     collected transition counts; check mass conservation."""
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.seq import (
         MS_ITERS,
         MS_SCALE,
         seq_markov_stationary,
@@ -224,10 +222,7 @@ def test_markov_stationary_fixed_point_properties(spark, sf_dir):
 
 
 def test_atr_matches_python_reference(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
-        ATR_WINDOW,
-        window_average_true_range,
-    )
+    from parquet_batch_spark.operators.stats.window import ATR_WINDOW, window_average_true_range
     from parquet_batch_spark.operators.analytics import rollup_ohlc_bars  # noqa: F401
 
     ev = load(spark, sf_dir, "events")
@@ -379,10 +374,7 @@ def test_theil_index_python_reference(spark, sf_dir):
     in pure Python from the raw balances."""
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
-        THEIL_SEGMENTS,
-        agg_theil_index,
-    )
+    from parquet_batch_spark.operators.stats.agg_descriptive import THEIL_SEGMENTS, agg_theil_index
 
     rows = load(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("seg"),
@@ -420,10 +412,7 @@ def test_theil_index_python_reference(spark, sf_dir):
 
 
 def test_hurst_python_reference(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
-        HURST_LAGS,
-        window_hurst_exponent,
-    )
+    from parquet_batch_spark.operators.stats.window import HURST_LAGS, window_hurst_exponent
 
     daily_rows = (
         load(spark, sf_dir, "orders")
@@ -474,7 +463,7 @@ def test_hurst_python_reference(spark, sf_dir):
 
 
 def test_benjamini_hochberg_python_reference(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.agg_inference import (
         _bh_thresholds,
         agg_benjamini_hochberg,
     )
@@ -592,7 +581,7 @@ def test_textrank_python_reference(spark, sf_dir):
 def test_levene_brown_forsythe_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import agg_levene_test
+    from parquet_batch_spark.operators.stats.agg_inference import agg_levene_test
 
     rows = load(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
@@ -633,7 +622,7 @@ def test_levene_brown_forsythe_python_reference(spark, sf_dir):
 def test_theil_sen_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import window_theil_sen
+    from parquet_batch_spark.operators.stats.window import window_theil_sen
 
     monthly: dict[int, int] = defaultdict(int)
     for r in load(spark, sf_dir, "orders").select(
@@ -666,7 +655,7 @@ def test_theil_sen_python_reference(spark, sf_dir):
 
 
 def test_brier_decomposition_identity_and_bounds(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import ml_brier_decomposition
+    from parquet_batch_spark.operators.stats.ml import ml_brier_decomposition
 
     got = ml_brier_decomposition(spark, sf_dir).collect()[0]
     # all components are squared micro quantities: non-negative, <= 1e12
@@ -750,7 +739,7 @@ def test_fk_audit_orphan_accounting(spark, sf_dir):
 
 
 def test_cochran_armitage_python_reference(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.agg_inference import (
         ANOVA_PRIORITIES,
         agg_cochran_armitage,
     )
@@ -849,9 +838,7 @@ def test_horvitz_thompson_estimator_properties(spark, sf_dir):
 def test_krippendorff_alpha_python_reference(spark, sf_dir):
     from collections import Counter
 
-    from parquet_batch_spark.operators.stats_ops import (
-        quality_krippendorff_alpha,
-    )
+    from parquet_batch_spark.operators.stats.quality import quality_krippendorff_alpha
 
     multi = {
         "en": ["the", "a", "of", "and", "to"],
@@ -892,7 +879,7 @@ def test_krippendorff_alpha_python_reference(spark, sf_dir):
 
 
 def test_rrf_python_reference(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.ml import (
         RRF_K,
         RRF_POOL,
         RRF_QUERY,
@@ -928,7 +915,7 @@ def test_rrf_python_reference(spark, sf_dir):
 
 
 def test_capture_recapture_estimator_lands(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import agg_capture_recapture
+    from parquet_batch_spark.operators.stats.agg_inference import agg_capture_recapture
 
     got = agg_capture_recapture(spark, sf_dir).collect()[0]
     # ~50% capture probability per crawl
@@ -968,10 +955,8 @@ def test_late_arriving_dimension_reconciliation(spark, sf_dir):
 def test_score_separation_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
-        ECE_SCALE_CHARS,
-        ml_score_separation_report,
-    )
+    from parquet_batch_spark.operators.stats.common import ECE_SCALE_CHARS
+    from parquet_batch_spark.operators.stats.ml import ml_score_separation_report
 
     blocks: dict[int, list[int]] = defaultdict(lambda: [0, 0])
     for r in load(spark, sf_dir, "documents").select(
@@ -1004,9 +989,7 @@ def test_score_separation_python_reference(spark, sf_dir):
 
 
 def test_market_concentration_axioms(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
-        agg_market_concentration,
-    )
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_market_concentration
 
     rows = agg_market_concentration(spark, sf_dir).collect()
     assert rows
@@ -1021,10 +1004,7 @@ def test_market_concentration_axioms(spark, sf_dir):
 
 
 def test_haar_wavelet_python_reference(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
-        HAAR_LEVELS,
-        window_haar_wavelet_energy,
-    )
+    from parquet_batch_spark.operators.stats.window import HAAR_LEVELS, window_haar_wavelet_energy
 
     daily = (
         load(spark, sf_dir, "orders")
@@ -1056,7 +1036,7 @@ def test_haar_wavelet_python_reference(spark, sf_dir):
 def test_markov_attribution_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.seq import (
         MA_CHANNELS,
         MA_SCALE,
         _ma_absorb,
@@ -1127,7 +1107,7 @@ def test_markov_attribution_python_reference(spark, sf_dir):
 def test_lorenz_curve_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.agg_descriptive import (
         LORENZ_DECILES,
         agg_lorenz_curve,
     )
@@ -1184,7 +1164,7 @@ def test_fellegi_sunter_weights_properties(spark, sf_dir):
 def test_icc_design_effect_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import agg_icc_design_effect
+    from parquet_batch_spark.operators.stats.agg_inference import agg_icc_design_effect
 
     by_c: dict[int, list[int]] = defaultdict(list)
     for r in load(spark, sf_dir, "orders").select(
@@ -1215,7 +1195,7 @@ def test_icc_design_effect_python_reference(spark, sf_dir):
 
 
 def test_record_highs_python_reference(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import window_record_highs
+    from parquet_batch_spark.operators.stats.window import window_record_highs
 
     daily = (
         load(spark, sf_dir, "orders")
@@ -1248,7 +1228,7 @@ def test_record_highs_python_reference(spark, sf_dir):
 def test_gumbel_fit_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.agg_descriptive import (
         GUMBEL_GAMMA,
         _gumbel_c,
         agg_gumbel_extreme_value,
@@ -1343,7 +1323,7 @@ def test_energy_distance_python_reference(spark, sf_dir):
     counts; the op must match exactly (it is exact, not binned)."""
     from collections import Counter
 
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.agg_inference import (
         TT_GROUP_A,
         TT_GROUP_B,
         agg_energy_distance,
@@ -1539,7 +1519,7 @@ def test_prefix_cluster_python_reference(spark, sf_dir):
 def test_price_index_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.agg_descriptive import (
         PI_BASE_YEAR,
         PI_CURR_YEAR,
         agg_price_index_laspeyres,
@@ -1620,7 +1600,7 @@ def test_good_turing_python_reference(spark, sf_dir):
 
 
 def test_spc_control_limits_python_reference(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.window import (
         SPC_D2_INV_MICRO,
         SPC_SIGMA_MULT,
         window_spc_control_limits,
@@ -1657,11 +1637,7 @@ def test_spc_control_limits_python_reference(spark, sf_dir):
 
 
 def test_ljung_box_python_reference(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
-        LB_CHI2_CRIT,
-        LB_LAGS,
-        window_ljung_box,
-    )
+    from parquet_batch_spark.operators.stats.window import LB_CHI2_CRIT, LB_LAGS, window_ljung_box
 
     daily = (
         load(spark, sf_dir, "orders")
@@ -1696,10 +1672,10 @@ def test_ljung_box_python_reference(spark, sf_dir):
 def test_cost_threshold_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.common import ECE_SCALE_CHARS
+    from parquet_batch_spark.operators.stats.ml import (
         COST_FN,
         COST_FP,
-        ECE_SCALE_CHARS,
         ml_cost_sensitive_threshold,
         ml_score_separation_report,
     )
@@ -1736,7 +1712,7 @@ def test_cost_threshold_python_reference(spark, sf_dir):
 def test_mutual_information_python_reference(spark, sf_dir):
     from collections import Counter
 
-    from parquet_batch_spark.operators.stats_ops import agg_mutual_information
+    from parquet_batch_spark.operators.stats.agg_inference import agg_mutual_information
 
     cells: Counter = Counter()
     for r in load(spark, sf_dir, "orders").select(
@@ -1773,10 +1749,7 @@ def test_ipw_ate_python_reference(spark, sf_dir):
     import hashlib
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
-        IPW_PROPENSITY_PCT,
-        sample_ipw_ate,
-    )
+    from parquet_batch_spark.operators.stats.sample import IPW_PROPENSITY_PCT, sample_ipw_ate
 
     spend: dict[int, int] = defaultdict(int)
     for r in load(spark, sf_dir, "orders").select(
@@ -1816,7 +1789,7 @@ def test_ipw_ate_python_reference(spark, sf_dir):
 def test_partial_correlation_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import agg_partial_correlation
+    from parquet_batch_spark.operators.stats.agg_inference import agg_partial_correlation
 
     agg: dict[int, list] = defaultdict(lambda: [0, 0, None, None])
     for r in load(spark, sf_dir, "orders").select(
@@ -1860,9 +1833,7 @@ def test_partial_correlation_python_reference(spark, sf_dir):
 def test_digit_preference_python_reference(spark, sf_dir):
     from collections import Counter
 
-    from parquet_batch_spark.operators.stats_ops import (
-        quality_digit_preference,
-    )
+    from parquet_batch_spark.operators.stats.quality import quality_digit_preference
 
     hist: Counter = Counter()
     for r in load(spark, sf_dir, "customer").select("c_acctbal").collect():
@@ -1882,9 +1853,7 @@ def test_digit_preference_python_reference(spark, sf_dir):
 def test_interarrival_burstiness_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
-        window_interarrival_burstiness,
-    )
+    from parquet_batch_spark.operators.stats.window import window_interarrival_burstiness
 
     ev = (
         load(spark, sf_dir, "events")
@@ -1921,7 +1890,7 @@ def test_interarrival_burstiness_python_reference(spark, sf_dir):
 def test_markov_predictive_accuracy_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.seq import (
         seq_markov_predictive_accuracy,
         seq_transition_matrix,
     )
@@ -1952,10 +1921,7 @@ def test_markov_predictive_accuracy_python_reference(spark, sf_dir):
 def test_pot_gpd_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
-        POT_PCT,
-        window_peak_over_threshold,
-    )
+    from parquet_batch_spark.operators.stats.window import POT_PCT, window_peak_over_threshold
 
     daily: dict = defaultdict(int)
     for r in load(spark, sf_dir, "orders").select(
@@ -2073,7 +2039,7 @@ def test_burrows_delta_python_reference(spark, sf_dir):
 def test_sortino_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import window_sortino_ratio
+    from parquet_batch_spark.operators.stats.window import window_sortino_ratio
 
     daily: dict = defaultdict(int)
     for r in load(spark, sf_dir, "orders").select(
@@ -2097,9 +2063,7 @@ def test_sortino_python_reference(spark, sf_dir):
 def test_indirect_standardization_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
-        agg_indirect_standardization,
-    )
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_indirect_standardization
 
     cust = {
         r["c_custkey"]: (r["c_mktsegment"], r["c_nationkey"])
@@ -2155,10 +2119,7 @@ def test_indirect_standardization_python_reference(spark, sf_dir):
 def test_sprt_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
-        _sprt_consts,
-        sample_sprt_monitor,
-    )
+    from parquet_batch_spark.operators.stats.sample import _sprt_consts, sample_sprt_monitor
 
     k = _sprt_consts()
     daily: dict = defaultdict(lambda: [0, 0])
@@ -2196,10 +2157,7 @@ def test_sprt_python_reference(spark, sf_dir):
 def test_expected_shortfall_python_reference(spark, sf_dir):
     from collections import defaultdict
 
-    from parquet_batch_spark.operators.stats_ops import (
-        ES_PCT,
-        agg_expected_shortfall,
-    )
+    from parquet_batch_spark.operators.stats.agg_descriptive import ES_PCT, agg_expected_shortfall
 
     daily: dict = defaultdict(int)
     for r in load(spark, sf_dir, "orders").select(

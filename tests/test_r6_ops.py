@@ -15,7 +15,7 @@ from parquet_batch_spark.operators.pipeline_ops import (
     NULLITY_BIG_ORDER,
     quality_nullity_patterns,
 )
-from parquet_batch_spark.operators.stats_ops import (
+from parquet_batch_spark.operators.stats.ml import (
     ISO_BINS,
     ml_isotonic_calibration,
     ml_mcc_balanced_accuracy,
@@ -31,7 +31,7 @@ from parquet_batch_spark.operators.llm_prep import (
     sample_doremi_proxy_weights,
     seq_curriculum_order,
 )
-from parquet_batch_spark.operators.stats_ops import (
+from parquet_batch_spark.operators.stats.window import (
     PH_DELTA_CENTS,
     PH_LAMBDA_CENTS,
     window_page_hinkley_drift,
@@ -525,7 +525,7 @@ def test_hits_bipartite_matches_python_iterations(spark, sf_dir):
 
 
 def test_holt_linear_trend_matches_python_recurrence(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.window import (
         HOLT_FORECAST_H,
         window_holt_linear_trend,
     )
@@ -565,7 +565,7 @@ def test_holt_linear_trend_matches_python_recurrence(spark, sf_dir):
 
 
 def test_empirical_bayes_shrinks_toward_prior(spark, sf_dir):
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.agg_descriptive import (
         EB_M_CAP,
         agg_empirical_bayes_shrinkage,
     )

@@ -11,6 +11,9 @@ import json
 import os
 import re
 
+import pytest
+
+import parquet_batch_spark
 from parquet_batch_spark.operators import (
     _WINDOW_SIZE,
     _entry_green,
@@ -31,6 +34,34 @@ def _ever_checked() -> set[str]:
         if re.match(r"CORRECTNESS_r(\d+)\.json$", os.path.basename(f)):
             checked.update(json.load(open(f)))
     return checked
+
+
+MAX_MODULE_LINES = 4333
+
+
+def test_no_package_module_exceeds_line_limit():
+    """A process that compiles from source peaks in memory with its largest module."""
+    pkg = os.path.dirname(os.path.abspath(parquet_batch_spark.__file__))
+    long_modules = {}
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            n = sum(1 for _ in f)
+        if n > MAX_MODULE_LINES:
+            long_modules[os.path.relpath(path, pkg)] = n
+    assert not long_modules, long_modules
+
+
+def test_unimportable_registry_module_raises(monkeypatch):
+    """A registry module that does not import fails the registry
+    instead of silently dropping its ops from ``all_queries()``."""
+    import parquet_batch_spark.operators as ops
+
+    missing = "parquet_batch_spark.operators.no_such_module"
+    monkeypatch.setattr(ops, "_MODULES", [*ops._MODULES, missing])
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        ops.all_queries()
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        ops.all_oracles()
 
 
 def test_window_names_exist_and_are_unique():

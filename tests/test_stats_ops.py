@@ -10,22 +10,21 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from parquet_batch_spark.catalog import load
-from parquet_batch_spark.operators.stats_ops import (
-    CORR_FRAME,
-    PSI_BINS,
-    ZIPF_TOP,
-    agg_chi_square_independence,
-    ml_ols_multivar,
-    quality_ks_drift,
-    sample_bootstrap_means,
-    text_pmi_cooccurrence,
+from parquet_batch_spark.operators.stats.agg_descriptive import (
     agg_entropy_balance,
     agg_regression_per_group,
-    quality_psi_drift,
-    seq_transition_matrix,
-    text_zipf_fit,
-    window_rolling_corr,
 )
+from parquet_batch_spark.operators.stats.agg_inference import agg_chi_square_independence
+from parquet_batch_spark.operators.stats.ml import ml_ols_multivar
+from parquet_batch_spark.operators.stats.quality import (
+    PSI_BINS,
+    quality_ks_drift,
+    quality_psi_drift,
+)
+from parquet_batch_spark.operators.stats.sample import sample_bootstrap_means
+from parquet_batch_spark.operators.stats.seq import seq_transition_matrix
+from parquet_batch_spark.operators.stats.text import ZIPF_TOP, text_pmi_cooccurrence, text_zipf_fit
+from parquet_batch_spark.operators.stats.window import CORR_FRAME, window_rolling_corr
 
 
 def test_regression_matches_numpy(spark, sf_dir):
@@ -236,7 +235,7 @@ def test_bootstrap_means_concentrate(spark, sf_dir):
     """All B resamples emitted; each effective n within 5σ of the
     Poisson total (≈N ± 5√N); resample means bracket the observed
     mean collectively."""
-    from parquet_batch_spark.operators.stats_ops import BOOT_B
+    from parquet_batch_spark.operators.stats.sample import BOOT_B
 
     rows = sample_bootstrap_means(spark, sf_dir).collect()
     assert len(rows) == BOOT_B
@@ -256,7 +255,7 @@ def test_bootstrap_means_concentrate(spark, sf_dir):
 def test_km_survival_monotone(spark, sf_dir):
     """Survival is non-increasing in t, within (0, 1]; n_risk is
     non-increasing; first n_risk equals the user count."""
-    from parquet_batch_spark.operators.stats_ops import agg_survival_km
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_survival_km
 
     rows = agg_survival_km(spark, sf_dir).collect()
     assert rows
@@ -273,7 +272,7 @@ def test_km_survival_monotone(spark, sf_dir):
 def test_cusum_one_row_per_type(spark, sf_dir):
     """One changepoint per event type; excursion ≥ 0; the changepoint
     day lies within the observed day range."""
-    from parquet_batch_spark.operators.stats_ops import window_cusum_changepoint
+    from parquet_batch_spark.operators.stats.window import window_cusum_changepoint
 
     rows = window_cusum_changepoint(spark, sf_dir).collect()
     ev = load(spark, sf_dir, "events")
@@ -290,7 +289,7 @@ def test_cusum_one_row_per_type(spark, sf_dir):
 def test_pivot_multi_mass_conserved(spark, sf_dir):
     """Pivoted counts sum to the order count; revenue cells sum to
     total revenue (exact decimal on both sides)."""
-    from parquet_batch_spark.operators.stats_ops import agg_pivot_multi
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_pivot_multi
 
     rows = agg_pivot_multi(spark, sf_dir).collect()
     o = load(spark, sf_dir, "orders")
@@ -305,7 +304,7 @@ def test_pivot_multi_mass_conserved(spark, sf_dir):
 def test_ab_assignment_balanced_and_deterministic(spark, sf_dir):
     """Both arms present, near-50/50 (SRM χ² under a generous bound for
     an honest hash), and the assignment is identical across runs."""
-    from parquet_batch_spark.operators.stats_ops import sample_ab_assignment_srm
+    from parquet_batch_spark.operators.stats.sample import sample_ab_assignment_srm
 
     rows1 = sample_ab_assignment_srm(spark, sf_dir).collect()
     rows2 = sample_ab_assignment_srm(spark, sf_dir).collect()
@@ -320,7 +319,7 @@ def test_ab_assignment_balanced_and_deterministic(spark, sf_dir):
 def test_acf_bounds_and_lag1_positive(spark, sf_dir):
     """ACF values lie in [-1, 1]; exactly ACF_MAX_LAG rows; pair counts
     shrink by one per lag; numpy cross-check at lag 1."""
-    from parquet_batch_spark.operators.stats_ops import ACF_MAX_LAG, window_acf_lags
+    from parquet_batch_spark.operators.stats.window import ACF_MAX_LAG, window_acf_lags
 
     rows = window_acf_lags(spark, sf_dir).collect()
     assert [r["lag"] for r in rows] == list(range(1, ACF_MAX_LAG + 1))
@@ -351,7 +350,10 @@ def test_acf_bounds_and_lag1_positive(spark, sf_dir):
 def test_ltv_curve_monotone(spark, sf_dir):
     """Cumulative revenue is non-decreasing within each cohort; LTV per
     customer equals cum/size; offsets within range."""
-    from parquet_batch_spark.operators.stats_ops import LTV_MAX_OFFSET, agg_cohort_ltv_curve
+    from parquet_batch_spark.operators.stats.agg_descriptive import (
+        LTV_MAX_OFFSET,
+        agg_cohort_ltv_curve,
+    )
 
     rows = agg_cohort_ltv_curve(spark, sf_dir).collect()
     assert rows
@@ -370,7 +372,7 @@ def test_ltv_curve_monotone(spark, sf_dir):
 def test_freshness_accounting(spark, sf_dir):
     """active + missing = expected for every stream; gaps and staleness
     fit inside the span; every event type present."""
-    from parquet_batch_spark.operators.stats_ops import quality_freshness_sla
+    from parquet_batch_spark.operators.stats.quality import quality_freshness_sla
 
     rows = quality_freshness_sla(spark, sf_dir).collect()
     ev = load(spark, sf_dir, "events")
@@ -385,7 +387,7 @@ def test_freshness_accounting(spark, sf_dir):
 def test_hist2d_shares(spark, sf_dir):
     """Cell counts conserve mass; row shares sum to 1 per price band;
     total shares sum to 1."""
-    from parquet_batch_spark.operators.stats_ops import agg_hist2d_joint
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_hist2d_joint
 
     rows = agg_hist2d_joint(spark, sf_dir).collect()
     n = load(spark, sf_dir, "lineitem").count()
@@ -402,10 +404,7 @@ def test_peak_concurrency_brute_force(spark, sf_dir):
     """Distributed two-phase sweep equals a driver-side brute-force
     sweep over the same session intervals; peaks are positive and
     bounded by the user count."""
-    from parquet_batch_spark.operators.stats_ops import (
-        PEAK_GAP_S,
-        window_peak_concurrency,
-    )
+    from parquet_batch_spark.operators.stats.window import PEAK_GAP_S, window_peak_concurrency
 
     rows = window_peak_concurrency(spark, sf_dir).collect()
     assert rows
@@ -457,7 +456,7 @@ def test_lsh_recall_eval_consistent(spark, sf_dir):
 def test_attribution_consistent(spark, sf_dir):
     """Attributed counts never exceed purchase counts; 24h-credited ≤
     ever-touched; total purchases match a direct count."""
-    from parquet_batch_spark.operators.stats_ops import agg_touch_attribution
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_touch_attribution
 
     rows = agg_touch_attribution(spark, sf_dir).collect()
     assert rows
@@ -475,7 +474,7 @@ def test_attribution_consistent(spark, sf_dir):
 def test_rfm_mass_and_shares(spark, sf_dir):
     """Segment sizes sum to the customer count; revenue shares sum to
     1; all scores within 1..4; non-trivial segmentation (>5 cells)."""
-    from parquet_batch_spark.operators.stats_ops import agg_rfm_segmentation
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_rfm_segmentation
 
     rows = agg_rfm_segmentation(spark, sf_dir).collect()
     n_cust = load(spark, sf_dir, "orders").select("o_custkey").distinct().count()
@@ -501,7 +500,7 @@ def test_pit_join_exactly_one_version_per_order(spark, sf_dir):
 
 def test_gap_distribution_mass(spark, sf_dir):
     """Gap count equals orders minus customers; shares sum to 1."""
-    from parquet_batch_spark.operators.stats_ops import window_order_gap_distribution
+    from parquet_batch_spark.operators.stats.window import window_order_gap_distribution
 
     rows = window_order_gap_distribution(spark, sf_dir).collect()
     o = load(spark, sf_dir, "orders")
@@ -514,7 +513,7 @@ def test_gap_distribution_mass(spark, sf_dir):
 def test_coverage_curve_monotone(spark, sf_dir):
     """Coverage is strictly increasing in rank and ends ≤ 1; the last
     checkpoint at or beyond the vocab size covers everything."""
-    from parquet_batch_spark.operators.stats_ops import text_ngram_coverage_curve
+    from parquet_batch_spark.operators.stats.text import text_ngram_coverage_curve
 
     rows = text_ngram_coverage_curve(spark, sf_dir).collect()
     assert rows
@@ -527,7 +526,7 @@ def test_coverage_curve_monotone(spark, sf_dir):
 def test_importance_weights_ess(spark, sf_dir):
     """Weights are positive and capped; ESS ≤ N and equal across rows;
     a uniform corpus would give weight 1 everywhere."""
-    from parquet_batch_spark.operators.stats_ops import IW_CAP, sample_importance_weights
+    from parquet_batch_spark.operators.stats.sample import IW_CAP, sample_importance_weights
 
     rows = sample_importance_weights(spark, sf_dir).collect()
     n = load(spark, sf_dir, "documents").count()
@@ -543,7 +542,7 @@ def test_pca_power_iteration_matches_numpy_replica(spark, sf_dir):
     exact arbitrary-precision replica (second moment from the raw
     corpus, same round-half-away integer normalization), and the
     output direction is milli-normalized (max |loading| = 1000)."""
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.ml import (
         PCA_DIMS,
         PCA_ITERS,
         embedding_pca_power_iteration,
@@ -577,7 +576,7 @@ def test_pca_power_iteration_matches_numpy_replica(spark, sf_dir):
 def test_seasonality_index_weighted_mean_one(spark, sf_dir):
     """Day-weighted mean of the indices is 1 (by construction); all 12
     months present with positive revenue."""
-    from parquet_batch_spark.operators.stats_ops import agg_seasonality_index
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_seasonality_index
 
     rows = agg_seasonality_index(spark, sf_dir).collect()
     assert [r["moy"] for r in rows] == list(range(1, 13))
@@ -594,7 +593,7 @@ def test_heatmap_cells_and_dow_formula(spark, sf_dir):
     matches python's weekday convention on a sample day."""
     import datetime
 
-    from parquet_batch_spark.operators.stats_ops import agg_weekday_hour_heatmap
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_weekday_hour_heatmap
 
     rows = agg_weekday_hour_heatmap(spark, sf_dir).collect()
     assert math.isclose(sum(r["share"] for r in rows), 1.0, abs_tol=1e-3)
@@ -609,7 +608,7 @@ def test_heatmap_cells_and_dow_formula(spark, sf_dir):
 def test_elasticity_negative_like_demand(spark, sf_dir):
     """Every part type yields a finite elasticity; n_items conserve the
     joined row count."""
-    from parquet_batch_spark.operators.stats_ops import agg_price_elasticity
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_price_elasticity
 
     rows = agg_price_elasticity(spark, sf_dir).collect()
     assert rows
@@ -624,7 +623,7 @@ def test_elasticity_negative_like_demand(spark, sf_dir):
 def test_rsi_bounded(spark, sf_dir):
     """RSI lies in [0, 100]; every priority series emits rows; only
     full frames at sampled ranks appear."""
-    from parquet_batch_spark.operators.stats_ops import window_rsi_momentum
+    from parquet_batch_spark.operators.stats.window import window_rsi_momentum
 
     rows = window_rsi_momentum(spark, sf_dir).collect()
     assert rows
@@ -637,7 +636,7 @@ def test_rsi_bounded(spark, sf_dir):
 def test_surrogate_keys_dense_and_stable(spark, sf_dir):
     """Dense keys are 1..N with no gaps; stable keys are unique and
     invariant across runs; one row per distinct natural key."""
-    from parquet_batch_spark.operators.stats_ops import etl_surrogate_keys
+    from parquet_batch_spark.operators.stats.quality import etl_surrogate_keys
 
     rows1 = etl_surrogate_keys(spark, sf_dir).collect()
     rows2 = etl_surrogate_keys(spark, sf_dir).collect()
@@ -650,7 +649,7 @@ def test_surrogate_keys_dense_and_stable(spark, sf_dir):
 
 def test_cmgr_recovers_ratio(spark, sf_dir):
     """(1+cmgr)^(n-1) ≈ last/first for every priority."""
-    from parquet_batch_spark.operators.stats_ops import agg_growth_cmgr
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_growth_cmgr
 
     rows = agg_growth_cmgr(spark, sf_dir).collect()
     assert len(rows) == 5
@@ -664,7 +663,7 @@ def test_readability_counts_positive(spark, sf_dir):
     """Counts are positive; cohorts cover all docs; words ≥ sentences
     would not hold in general but syllables ≥ words does for vowel
     text — assert the defined invariants only."""
-    from parquet_batch_spark.operators.stats_ops import text_readability_scores
+    from parquet_batch_spark.operators.stats.text import text_readability_scores
 
     rows = text_readability_scores(spark, sf_dir).collect()
     n_docs = load(spark, sf_dir, "documents").count()
@@ -677,7 +676,7 @@ def test_readability_counts_positive(spark, sf_dir):
 def test_event_paths_ranked(spark, sf_dir):
     """Ranks are 1..k with counts non-increasing; path counts conserve
     (each user contributes max(0, n_i - 2) paths)."""
-    from parquet_batch_spark.operators.stats_ops import seq_event_paths
+    from parquet_batch_spark.operators.stats.seq import seq_event_paths
 
     rows = seq_event_paths(spark, sf_dir).collect()
     assert rows and [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
@@ -688,7 +687,7 @@ def test_event_paths_ranked(spark, sf_dir):
 def test_stickiness_bounds(spark, sf_dir):
     """dau ≤ wau ≤ mau and stickiness in (0, 1]; every active day has
     a row."""
-    from parquet_batch_spark.operators.stats_ops import agg_dau_mau_stickiness
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_dau_mau_stickiness
 
     rows = agg_dau_mau_stickiness(spark, sf_dir).collect()
     ev = load(spark, sf_dir, "events")
@@ -704,7 +703,7 @@ def test_stickiness_bounds(spark, sf_dir):
 def test_duplicate_token_share_consistent(spark, sf_dir):
     """Duplicate docs equal total minus distinct texts; shares bounded;
     token mass conserved against a direct count."""
-    from parquet_batch_spark.operators.stats_ops import quality_duplicate_token_share
+    from parquet_batch_spark.operators.stats.quality import quality_duplicate_token_share
     from parquet_batch_spark.functions.text import tokens_col
 
     row = quality_duplicate_token_share(spark, sf_dir).collect()[0]
@@ -721,7 +720,7 @@ def test_duplicate_token_share_consistent(spark, sf_dir):
 def test_norm_outliers_are_extreme(spark, sf_dir):
     """Flagged norms sit outside mean ± 3σ of a numpy recomputation on
     identically quantized vectors."""
-    from parquet_batch_spark.operators.stats_ops import embedding_norm_outliers
+    from parquet_batch_spark.operators.stats.ml import embedding_norm_outliers
 
     rows = embedding_norm_outliers(spark, sf_dir).collect()
     emb = load(spark, sf_dir, "embeddings").select("embedding").collect()
@@ -738,7 +737,7 @@ def test_norm_outliers_are_extreme(spark, sf_dir):
 
 def test_xyz_classes_conserve_brands(spark, sf_dir):
     """Class counts sum to the brand count; min ≤ max CV per class."""
-    from parquet_batch_spark.operators.stats_ops import agg_xyz_classification
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_xyz_classification
 
     rows = agg_xyz_classification(spark, sf_dir).collect()
     n_brands = load(spark, sf_dir, "part").select("p_brand").distinct().count()
@@ -752,7 +751,7 @@ def test_code_detection_counts(spark, sf_dir):
     """Cohort doc counts conserve corpus mass; code-like never exceeds
     the cohort size (the synthetic prose corpus should be mostly
     non-code)."""
-    from parquet_batch_spark.operators.stats_ops import text_code_detection
+    from parquet_batch_spark.operators.stats.text import text_code_detection
 
     rows = text_code_detection(spark, sf_dir).collect()
     n_docs = load(spark, sf_dir, "documents").count()
@@ -766,7 +765,7 @@ def test_code_detection_counts(spark, sf_dir):
 def test_time_split_accounting(spark, sf_dir):
     """Rows and customers conserve; leakage + train-only + val-only
     equals the customer count."""
-    from parquet_batch_spark.operators.stats_ops import sample_time_split_leakage
+    from parquet_batch_spark.operators.stats.sample import sample_time_split_leakage
 
     row = sample_time_split_leakage(spark, sf_dir).collect()[0]
     o = load(spark, sf_dir, "orders")
@@ -783,7 +782,7 @@ def test_time_split_accounting(spark, sf_dir):
 def test_welch_ttest_matches_scipy_free_formula(spark, sf_dir):
     """t statistic and dof match a numpy recomputation on the same
     floor-dollar samples."""
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.agg_inference import (
         TT_GROUP_A,
         TT_GROUP_B,
         agg_welch_ttest,
@@ -829,7 +828,7 @@ def test_schema_contract_all_match(spark, sf_dir):
     """Every orders column matches the pinned physical contract at this
     SF (the negative case is covered by construction: a MISSING or
     mismatched column would flip `matches`)."""
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.quality import (
         ORDERS_CONTRACT,
         quality_schema_contract,
     )
@@ -843,7 +842,7 @@ def test_schema_contract_all_match(spark, sf_dir):
 def test_kfold_partitions_customers(spark, sf_dir):
     """All K folds present; customer counts partition the customer set;
     train+fold = total for every fold; assignment deterministic."""
-    from parquet_batch_spark.operators.stats_ops import KFOLD_K, sample_kfold_assignment
+    from parquet_batch_spark.operators.stats.sample import KFOLD_K, sample_kfold_assignment
 
     rows1 = sample_kfold_assignment(spark, sf_dir).collect()
     rows2 = sample_kfold_assignment(spark, sf_dir).collect()
@@ -858,7 +857,7 @@ def test_kfold_partitions_customers(spark, sf_dir):
 def test_edit_distance_properties(spark, sf_dir):
     """Edit distance respects the length-difference lower bound and
     max-length upper bound; similarity in [0, 1e6]."""
-    from parquet_batch_spark.operators.stats_ops import func_edit_distance
+    from parquet_batch_spark.operators.stats.text import func_edit_distance
 
     rows = func_edit_distance(spark, sf_dir).collect()
     assert rows
@@ -871,7 +870,7 @@ def test_edit_distance_properties(spark, sf_dir):
 def test_nulls_placement_semantics(spark, sf_dir):
     """With NULLS LAST the null keys take the highest ranks; with
     NULLS FIRST the lowest; non-null relative order is identical."""
-    from parquet_batch_spark.operators.stats_ops import sort_nulls_placement
+    from parquet_batch_spark.operators.stats.agg_descriptive import sort_nulls_placement
 
     rows = sort_nulls_placement(spark, sf_dir).collect()
     nulls = [r for r in rows if r["prio_digit"] is None]
@@ -890,7 +889,10 @@ def test_nulls_placement_semantics(spark, sf_dir):
 def test_smoothed_means_shrink_toward_grand(spark, sf_dir):
     """Smoothed means sit between the raw mean and the grand mean;
     shrink weight matches n/(n+K); group masses conserve."""
-    from parquet_batch_spark.operators.stats_ops import SMOOTH_K, agg_smoothed_group_means
+    from parquet_batch_spark.operators.stats.agg_descriptive import (
+        SMOOTH_K,
+        agg_smoothed_group_means,
+    )
 
     rows = agg_smoothed_group_means(spark, sf_dir).collect()
     p = load(spark, sf_dir, "part")
@@ -909,7 +911,7 @@ def test_smoothed_means_shrink_toward_grand(spark, sf_dir):
 
 def test_fano_positive(spark, sf_dir):
     """Fano factors positive and finite; all event types covered."""
-    from parquet_batch_spark.operators.stats_ops import agg_fano_dispersion
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_fano_dispersion
 
     rows = agg_fano_dispersion(spark, sf_dir).collect()
     assert len(rows) == 5
@@ -921,7 +923,7 @@ def test_fano_positive(spark, sf_dir):
 def test_anova_matches_numpy(spark, sf_dir):
     """F statistic matches a numpy recomputation on floor-dollar
     values; SS decomposition is consistent (SSB + SSW = SST)."""
-    from parquet_batch_spark.operators.stats_ops import agg_anova_oneway
+    from parquet_batch_spark.operators.stats.agg_inference import agg_anova_oneway
 
     row = agg_anova_oneway(spark, sf_dir).collect()[0]
     vals = (
@@ -946,7 +948,7 @@ def test_anova_matches_numpy(spark, sf_dir):
 def test_wilson_interval_contains_rate(spark, sf_dir):
     """Wilson bounds bracket the point rate, stay in [0,1], and narrow
     as n grows."""
-    from parquet_batch_spark.operators.stats_ops import agg_conversion_wilson_ci
+    from parquet_batch_spark.operators.stats.agg_inference import agg_conversion_wilson_ci
 
     rows = agg_conversion_wilson_ci(spark, sf_dir).collect()
     assert rows
@@ -957,10 +959,8 @@ def test_wilson_interval_contains_rate(spark, sf_dir):
 def test_mde_positive_and_scaled(spark, sf_dir):
     """MDE positive; relative MDE consistent with absolute over the
     pooled mean; arms match the SRM op's split."""
-    from parquet_batch_spark.operators.stats_ops import (
-        agg_power_mde,
-        sample_ab_assignment_srm,
-    )
+    from parquet_batch_spark.operators.stats.agg_inference import agg_power_mde
+    from parquet_batch_spark.operators.stats.sample import sample_ab_assignment_srm
 
     row = agg_power_mde(spark, sf_dir).collect()[0]
     srm = {r["arm"]: r["n"] for r in sample_ab_assignment_srm(spark, sf_dir).collect()}
@@ -971,7 +971,7 @@ def test_mde_positive_and_scaled(spark, sf_dir):
 def test_ship_latency_shares(spark, sf_dir):
     """Shares sum to 1 per priority; line counts conserve the joined
     row count; buckets non-negative."""
-    from parquet_batch_spark.operators.stats_ops import window_ship_latency_histogram
+    from parquet_batch_spark.operators.stats.window import window_ship_latency_histogram
 
     rows = window_ship_latency_histogram(spark, sf_dir).collect()
     o = load(spark, sf_dir, "orders")
@@ -991,7 +991,7 @@ def test_did_cells_conserve(spark, sf_dir):
     """Four cell counts partition the orders; DiD equals the cell-mean
     arithmetic recomputed driver-side; A/A placebo effect is small
     relative to mean order value."""
-    from parquet_batch_spark.operators.stats_ops import agg_diff_in_diff
+    from parquet_batch_spark.operators.stats.agg_inference import agg_diff_in_diff
 
     row = agg_diff_in_diff(spark, sf_dir).collect()[0]
     n_orders = load(spark, sf_dir, "orders").count()
@@ -1008,7 +1008,7 @@ def test_did_cells_conserve(spark, sf_dir):
 def test_js_divergence_bounds(spark, sf_dir):
     """JS divergence in [0, 1] bits for every source pair; all pairs
     present; near-zero for same-distribution synthetic sources."""
-    from parquet_batch_spark.operators.stats_ops import text_js_divergence
+    from parquet_batch_spark.operators.stats.text import text_js_divergence
 
     rows = text_js_divergence(spark, sf_dir).collect()
     d = load(spark, sf_dir, "documents")
@@ -1021,7 +1021,7 @@ def test_js_divergence_bounds(spark, sf_dir):
 def test_mann_whitney_matches_scipy_formula(spark, sf_dir):
     """U statistics match a direct tie-aware recomputation; U_a + U_b
     = n_a * n_b."""
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.agg_inference import (
         TT_GROUP_A,
         TT_GROUP_B,
         agg_mann_whitney_u,
@@ -1058,7 +1058,7 @@ def test_mann_whitney_matches_scipy_formula(spark, sf_dir):
 def test_runs_test_brute_force(spark, sf_dir):
     """Runs count matches a driver-side recomputation; counts conserve
     the day series length minus one."""
-    from parquet_batch_spark.operators.stats_ops import window_runs_test
+    from parquet_batch_spark.operators.stats.window import window_runs_test
 
     row = window_runs_test(spark, sf_dir).collect()[0]
     daily = (
@@ -1101,7 +1101,7 @@ def test_split_gain_nonnegative(spark, sf_dir):
     """Split gain is ≥ 0 (up to term rounding) for every feature —
     conditioning never increases Gini impurity; parent impurity within
     (0, 1−1/k]."""
-    from parquet_batch_spark.operators.stats_ops import agg_split_gain_gini
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_split_gain_gini
 
     rows = agg_split_gain_gini(spark, sf_dir).collect()
     assert {r["feature"] for r in rows} == {"priority", "value_band", "order_year"}
@@ -1114,7 +1114,7 @@ def test_split_gain_nonnegative(spark, sf_dir):
 def test_char_entropy_band(spark, sf_dir):
     """Natural-language cohorts sit in a sane entropy band (2-6 bits);
     doc counts conserve corpus mass."""
-    from parquet_batch_spark.operators.stats_ops import text_char_entropy
+    from parquet_batch_spark.operators.stats.text import text_char_entropy
 
     rows = text_char_entropy(spark, sf_dir).collect()
     n_docs = load(spark, sf_dir, "documents").count()
@@ -1126,7 +1126,7 @@ def test_char_entropy_band(spark, sf_dir):
 def test_bounce_rate_consistency(spark, sf_dir):
     """Bounces never exceed sessions; session totals match the peak-
     concurrency op's session starts per day."""
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.window import (
         window_bounce_rate,
         window_peak_concurrency,
     )
@@ -1148,7 +1148,7 @@ def test_hll_sweep_bounds_hold(spark, sf_dir):
     oracle (ADVICE r7: ~0.3% flip chance per cell per dataset
     regeneration — this test may legitimately fail on a regeneration,
     driver parity must not)."""
-    from parquet_batch_spark.operators.stats_ops import (
+    from parquet_batch_spark.operators.stats.agg_descriptive import (
         HLL_RSDS,
         approx_hll_precision_sweep,
     )
@@ -1168,7 +1168,7 @@ def test_hll_sweep_bounds_hold(spark, sf_dir):
 
 def test_consistency_audit_counts(spark, sf_dir):
     """Violation counts match a direct filter; shares bounded."""
-    from parquet_batch_spark.operators.stats_ops import quality_cross_field_consistency
+    from parquet_batch_spark.operators.stats.quality import quality_cross_field_consistency
 
     rows = quality_cross_field_consistency(spark, sf_dir).collect()
     o = load(spark, sf_dir, "orders")
@@ -1185,7 +1185,7 @@ def test_consistency_audit_counts(spark, sf_dir):
 def test_rule_eval_confusion_consistent(spark, sf_dir):
     """Confusion cells partition the orders; F1 is the harmonic mean of
     the reported precision/recall."""
-    from parquet_batch_spark.operators.stats_ops import ml_rule_eval_f1
+    from parquet_batch_spark.operators.stats.ml import ml_rule_eval_f1
 
     row = ml_rule_eval_f1(spark, sf_dir).collect()[0]
     n = load(spark, sf_dir, "orders").count()
@@ -1197,7 +1197,7 @@ def test_rule_eval_confusion_consistent(spark, sf_dir):
 def test_lognormal_fit_matches_numpy(spark, sf_dir):
     """mu/sigma match numpy on identically milli-quantized logs; the
     fitted mean exceeds the fitted median (lognormal skew)."""
-    from parquet_batch_spark.operators.stats_ops import agg_lognormal_fit
+    from parquet_batch_spark.operators.stats.agg_descriptive import agg_lognormal_fit
 
     rows = {r["priority"]: r for r in agg_lognormal_fit(spark, sf_dir).collect()}
     vals = (
@@ -1220,7 +1220,7 @@ def test_lognormal_fit_matches_numpy(spark, sf_dir):
 def test_iso_week_rollup_boundaries(spark, sf_dir):
     """Order mass conserves; cross-year orders exist only in weeks 1
     and 52/53; weeks within 1..53."""
-    from parquet_batch_spark.operators.stats_ops import rollup_iso_week
+    from parquet_batch_spark.operators.stats.window import rollup_iso_week
 
     rows = rollup_iso_week(spark, sf_dir).collect()
     n = load(spark, sf_dir, "orders").count()
@@ -1235,7 +1235,7 @@ def test_iso_week_rollup_boundaries(spark, sf_dir):
 def test_realized_vol_positive(spark, sf_dir):
     """Volatility positive for months with returns; return counts
     conserve (days − 1)."""
-    from parquet_batch_spark.operators.stats_ops import window_realized_volatility
+    from parquet_batch_spark.operators.stats.window import window_realized_volatility
 
     rows = window_realized_volatility(spark, sf_dir).collect()
     n_days = (
@@ -1252,7 +1252,7 @@ def test_realized_vol_positive(spark, sf_dir):
 def test_kendall_tau_matches_brute_force(spark, sf_dir):
     """τ matches a driver-side pair count; components partition the
     pair count."""
-    from parquet_batch_spark.operators.stats_ops import agg_kendall_tau
+    from parquet_batch_spark.operators.stats.agg_inference import agg_kendall_tau
 
     row = agg_kendall_tau(spark, sf_dir).collect()[0]
     assert row["concordant"] + row["discordant"] + row["tied"] == row["n_pairs"]
@@ -1285,7 +1285,7 @@ def test_seasonal_decompose_shares(spark, sf_dir):
     """The three variance shares approximately partition 1 (cross-terms
     and quantization keep it from exact); each share is a sane
     fraction; interior-day count matches days − (MA − 1)."""
-    from parquet_batch_spark.operators.stats_ops import DECOMP_MA, window_seasonal_decompose
+    from parquet_batch_spark.operators.stats.window import DECOMP_MA, window_seasonal_decompose
 
     row = window_seasonal_decompose(spark, sf_dir).collect()[0]
     n_days = (
@@ -1303,7 +1303,7 @@ def test_seasonal_decompose_shares(spark, sf_dir):
 def test_spearman_matches_scipy_free(spark, sf_dir):
     """ρ matches a driver-side recomputation with average ranks and is
     directionally consistent with Kendall's τ on the same table."""
-    from parquet_batch_spark.operators.stats_ops import agg_kendall_tau, agg_spearman_rho
+    from parquet_batch_spark.operators.stats.agg_inference import agg_kendall_tau, agg_spearman_rho
 
     row = agg_spearman_rho(spark, sf_dir).collect()[0]
     tau = agg_kendall_tau(spark, sf_dir).collect()[0]["kendall_tau"]
